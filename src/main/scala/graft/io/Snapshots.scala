@@ -30,10 +30,21 @@ import org.apache.spark.sql.functions._
   * materializes the complete set plan-side into a fresh checkpoint, so
   * chains stay bounded and total metadata is proportional to data
   * written, not versions × files. [[manifestDF]] resolves a version by
-  * walking to the nearest checkpoint and composing checkpoint + deltas
-  * lazily — every downstream consumer (pruning, diffs, history,
-  * streams) sees the same (path, partition, rows, stats) relation as
-  * before.
+  * walking to the nearest checkpoint and composing checkpoint + deltas:
+  * on the driver when the segments total at most 2 MB (no Spark job),
+  * plan-side above that — either way every consumer (pruning, diffs,
+  * history, streams) sees one (path, partition, rows, stats) relation.
+  *
+  * Every version-pinned read, write-side probe and SQL scan takes ONE
+  * path to its files: the operation resolves [[manifestDF]] once,
+  * [[pin]]s against that frame — one targeted collect of the data
+  * files its prune keeps plus every merge-on-read delete file — and
+  * [[scanPin]] scans the pin with the deletes applied. The public
+  * reads ([[readAsOf]], [[readPartition]], [[readWhere]], [[readIn]],
+  * [[readChanges]]) differ only in their prune predicate and residual
+  * filter; [[mergeRows]], [[deleteRows]], [[commitCompact]] and
+  * [[compactDeletes]] pin their base version's frame as often as they
+  * probe it, without resolving it again.
   *
   * The contract that makes readers safe during rewrites:
   *
@@ -61,14 +72,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: a commit's cost is the rewritten partition plus an
   * O(files) metadata job, and the carried-forward manifest flows
-  * manifest→manifest INSIDE a DataFrame plan — pruning, version
-  * diffs, and history aggregates likewise run plan-side over
-  * [[manifestDF]], so the driver materializes only pruned file lists,
-  * per-version summaries, and the commit's own fresh entries, never
-  * the full file history (ManifestScaleSpec pins this on a 100k-file
-  * manifest). The irreducible driver lists are the path array a
-  * full-version scan hands to the parquet reader (Spark's own
-  * InMemoryFileIndex class of cost) and vacuum's live-path set.
+  * manifest→manifest INSIDE a DataFrame plan. On the plan-side backend
+  * pruning, version diffs, and history aggregates likewise run inside
+  * the plan over [[manifestDF]], so the driver materializes only pins
+  * (pruned file lists), per-version summaries, and the commit's own
+  * fresh entries, never the full file history (ManifestScaleSpec pins
+  * this on a 100k-file manifest). The irreducible driver list is the
+  * path array a full-version pin hands to the parquet reader (Spark's
+  * own InMemoryFileIndex class of cost).
   */
 object Snapshots {
 
@@ -117,10 +128,18 @@ object Snapshots {
     if (!f.exists(cur) && f.exists(tmp) &&
         scala.util.Try(
           readSmallFile(f, tmp).trim.stripPrefix("v").toInt).isSuccess)
-      f.rename(tmp, cur)
+      healTmp(f, tmp, cur)
     if (!f.exists(cur)) 0
     else readSmallFile(f, cur).trim.stripPrefix("v").toInt
   }
+
+  /** Promote a legacy shared-name tmp onto its pointer (the reader
+    * crash heal). Concurrent readers race to the same rename; the
+    * loser finds the tmp already moved — the healed state, not an
+    * error. */
+  private def healTmp(f: FileSystem, tmp: Path, dst: Path): Unit =
+    try f.rename(tmp, dst)
+    catch { case _: java.io.FileNotFoundException => () }
 
   /** Atomic pointer flip. The old delete(cur)→rename(tmp, cur) dance
     * had two windows a concurrent reader could fall into (missing
@@ -220,7 +239,7 @@ object Snapshots {
     // again, failing readers at action time instead of with the clean
     // retention error ("floors never regress" broken)
     val tmp = new Path(table, "_vacuum_floor.tmp")
-    if (!f.exists(p) && f.exists(tmp)) f.rename(tmp, p)
+    if (!f.exists(p) && f.exists(tmp)) healTmp(f, tmp, p)
     if (!f.exists(p)) 1
     else readSmallFile(f, p).trim.stripPrefix("v").toInt
   }
@@ -330,7 +349,7 @@ object Snapshots {
     val p = refPath(table, name)
     // crash-window self-heal (the _CURRENT discipline)
     val tmp = new Path(refsDir(table), s"$name.tmp")
-    if (!f.exists(p) && f.exists(tmp)) f.rename(tmp, p)
+    if (!f.exists(p) && f.exists(tmp)) healTmp(f, tmp, p)
     if (!f.exists(p)) None
     else Some(readSmallFile(f, p).trim.stripPrefix("v").toInt)
   }
@@ -502,7 +521,8 @@ object Snapshots {
         // schema must never leak into the table schema (unreachable
         // in practice — deleteRowsMoR requires schema tracking — but
         // the filter keeps the invariant local)
-        val carriedPaths = allEntries(spark, table, prev)._1.map(_._1)
+        val carriedPaths =
+          pin(manifestDF(spark, table, prev), lit(true)).data.map(_._1)
         val carried = spark.read.option("mergeSchema", "true")
           .parquet(carriedPaths.map(p => s"$table/$p"): _*).schema
         evolveSchema(carried, df.schema, op)
@@ -625,15 +645,13 @@ object Snapshots {
   /** One walk down from `v` to the nearest checkpoint, reading each
     * version's `_delta_meta` (and its ckpt-ptr override) EXACTLY once:
     * returns (base checkpoint version, chain metas ascending). Both
-    * [[baseOf]] and [[manifestDF]] consume this walk — before the
-    * factoring, resolving one delta version re-read every meta across
-    * baseOf's walk AND the rebuild (O(chain²) filesystem round-trips
-    * per resolution, repeated per version by [[history]]; on an object
-    * store each is a network request). The base is still DERIVED,
+    * [[commitManifest]] and [[manifestDF]] consume this walk, so one
+    * resolution reads each meta once, not O(chain²) times (on an
+    * object store each read is a network request). The base is DERIVED,
     * never stored, so re-checkpointing a version in place (vacuum's
     * retention-floor compaction) transparently re-bases every later
     * delta; chain length is bounded by [[CheckpointEvery]]. */
-  private def chainOf(spark: SparkSession, table: String, v: Int)
+  private[io] def chainOf(spark: SparkSession, table: String, v: Int)
       : (Int, List[(Int, DeltaMeta)]) = {
     var w = v
     var metas = List.empty[(Int, DeltaMeta)]
@@ -649,10 +667,6 @@ object Snapshots {
         "(base manifest vacuumed)")
     (w, metas)
   }
-
-  /** Nearest checkpoint at or below `v` — the resolution base. */
-  private def baseOf(spark: SparkSession, table: String, v: Int): Int =
-    chainOf(spark, table, v)._1
 
   /** Does a tombstone from a commit under `rspec` reach a manifest row?
     * Only within the same ERA: both specs known and different → the row
@@ -672,7 +686,7 @@ object Snapshots {
       spec: Option[String] = None): Unit = {
     import spark.implicits._
     if (prev == 0) writeManifest(spark, table, v, adds)
-    else if (v - baseOf(spark, table, prev) >= CheckpointEvery) {
+    else if (v - chainOf(spark, table, prev)._1 >= CheckpointEvery) {
       val carried =
         if (removes.isEmpty) manifestDF(spark, table, prev)
         else manifestDF(spark, table, prev)
@@ -767,22 +781,32 @@ object Snapshots {
     // schema-inference job (guide §1.2: the schema is a constant of the
     // format, not something to rediscover per read)
     // DRIVER-SIDE fast path: small manifests (the overwhelmingly common
-    // case — segment bytes under [[driverManifestMaxBytes]]) resolve
+    // case — segment bytes under [[DriverManifestMaxBytes]]) resolve
     // with parquet-mr into a LocalRelation, so downstream collects and
     // broadcast builds against the manifest cost ZERO Spark jobs. Big
-    // tables fall through to the plan-side composition below
+    // tables fall through to the plan-side composition
     // (bounded-driver contract, ManifestScaleSpec).
-    manifestEntriesOpt(spark, table, v) match {
+    val chain = chainOf(spark, table, v)
+    driverManifest(spark, table, chain, DriverManifestMaxBytes) match {
       case Some(entries) =>
         import spark.implicits._
-        return entries.toDS().toDF()
-      case None => ()
+        entries.toDS().toDF()
+      case None => planManifest(spark, table, chain)
     }
+  }
+
+  /** Plan-side composition of one resolved [[chainOf]] — the backend
+    * for manifests over [[DriverManifestMaxBytes]], whose entries never
+    * reach the driver. [[driverManifest]] applies the same tombstone
+    * rules to driver Seqs; ManifestBackendParitySpec pins the two to
+    * identical entries. */
+  private[io] def planManifest(spark: SparkSession, table: String,
+      chain: (Int, List[(Int, DeltaMeta)])): DataFrame = {
     def readManifestDir(dir: String): DataFrame =
       spark.read.schema(ManifestSchema).parquet(dir)
-    chainOf(spark, table, v) match {
-      case (_, Nil) => // checkpoint: the complete set
-        readManifestDir(checkpointParquetDir(spark, table, v))
+    chain match {
+      case (b, Nil) => // checkpoint: the complete set
+        readManifestDir(checkpointParquetDir(spark, table, b))
       case (b, metas) =>
         // delta chain: nearest checkpoint + each delta's adds, tagged
         // with their origin version; a row survives unless its
@@ -826,16 +850,6 @@ object Snapshots {
       : Seq[FileEntry] = {
     import spark.implicits._
     manifestDF(spark, table, v).as[FileEntry].collect().toSeq
-  }
-
-  /** Data-file paths of one version — the minimal driver
-    * materialization a full-version scan needs (Spark's reader takes a
-    * path list; its own InMemoryFileIndex is the same O(files) class).
-    * Stats maps stay out of driver memory. */
-  private def manifestPaths(spark: SparkSession, table: String, v: Int)
-      : Seq[String] = {
-    import spark.implicits._
-    manifestDF(spark, table, v).select("path").as[String].collect().toSeq
   }
 
   // ---- commits --------------------------------------------------------
@@ -1126,10 +1140,7 @@ object Snapshots {
     * driver latency per resolution across the whole index-build query
     * class. Over the cap (≈30k+ files) the plan-side composition keeps
     * the bounded-driver contract for big tables (ManifestScaleSpec). */
-  private def driverManifestMaxBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.manifest.driverMaxBytes")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-      .getOrElse(2L * 1024 * 1024)
+  private val DriverManifestMaxBytes: Long = 2L * 1024 * 1024
 
   /** Decode one manifest row from a parquet-mr Group — fields the file
     * predates (pre-spec/pre-MoR manifests) read as None/null, exactly
@@ -1195,12 +1206,13 @@ object Snapshots {
     }
   }
 
-  /** Driver-side resolution of version `v`'s complete entry set — the
-    * same checkpoint + delta-adds + same-era-tombstone composition
-    * [[manifestDF]] runs plan-side, over driver Seqs. Returns None when
-    * the combined segment bytes exceed [[driverManifestMaxBytes]]. */
-  private def manifestEntriesOpt(spark: SparkSession, table: String,
-      v: Int): Option[Seq[FileEntry]] = {
+  /** Driver-side composition of one resolved [[chainOf]]'s complete
+    * entry set — the same checkpoint + delta-adds + same-era-tombstone
+    * composition [[planManifest]] runs plan-side, over driver Seqs.
+    * Returns None when the combined segment bytes exceed `maxBytes`. */
+  private[io] def driverManifest(spark: SparkSession, table: String,
+      chain: (Int, List[(Int, DeltaMeta)]), maxBytes: Long)
+      : Option[Seq[FileEntry]] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = fs(spark, table)
     def segFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
@@ -1208,14 +1220,14 @@ object Snapshots {
         case null => Nil
         case a => a.toSeq
       }
-    val (b, metas) = chainOf(spark, table, v)
+    val (b, metas) = chain
     val segs: Seq[(Int, Seq[org.apache.hadoop.fs.FileStatus])] =
       (b -> segFiles(checkpointParquetDir(spark, table, b))) +:
         metas.collect { case (w, m) if m.hasAdds =>
           w -> segFiles(manifestDir(table, w))
         }
-    if (segs.iterator.flatMap(_._2).map(_.getLen).sum >
-        driverManifestMaxBytes(spark)) return None
+    if (segs.iterator.flatMap(_._2).map(_.getLen).sum > maxBytes)
+      return None
     // same-era tombstones: a row dies iff ANY later tombstone names its
     // partition under a compatible spec (null/None on either side =
     // pre-evolution behavior, value match alone removes) — the driver
@@ -1513,10 +1525,13 @@ object Snapshots {
       // specCompat): an OTHER-ERA file whose partition VALUE collides
       // with `values` is untouched by this commit's era-scoped
       // tombstone and therefore a survivor — counting it as removed
-      // would spuriously refuse a commit that leaves it live
+      // would spuriously refuse a commit that leaves it live. Only
+      // DATA files count: a version whose sole entries are MoR delete
+      // files has nothing to scan either
       val survivors = manifestDF(spark, table, prev)
-        .where(!(col("partition").isin(values: _*) &&
-          specCompat(col("spec"), lit(partCol).cast("string"))))
+        .where(!isDelete(col("kind")) &&
+          !(col("partition").isin(values: _*) &&
+            specCompat(col("spec"), lit(partCol).cast("string"))))
         .limit(1).count()
       if (survivors == 0L) {
         breakReservation(spark, table, v)
@@ -1593,19 +1608,15 @@ object Snapshots {
   def commitCompact(spark: SparkSession, table: String, partCol: String,
       value: String, targetFiles: Int = 1,
       statsCols: Seq[String] = Nil): Int = {
-    import spark.implicits._
     val cur = currentVersion(spark, table)
-    val mine = manifestDF(spark, table, cur)
-      .where(col("partition") === lit(value) && !isDelete(col("kind")))
-      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-      .as[(String, Int)].collect().toSeq
-    require(mine.nonEmpty,
+    val mine = pin(manifestDF(spark, table, cur),
+      col("partition") === lit(value))
+    require(mine.data.nonEmpty,
       s"Snapshots.commitCompact: no files for $partCol=$value")
     // MoR-filtered (the deleteRows rule): the compacted file's fresh
     // seq must not resurrect rows an active delete file suppresses
     commitOverwritePartition(
-      morScan(spark, table, mine, activeDeletes(spark, table, cur),
-          schemaOf(spark, table, cur))
+      scanPin(spark, table, mine, schemaOf(spark, table, cur))
         .coalesce(targetFiles),
       table, partCol, value, statsCols, expectedPrev = Some(cur),
       // the explicit coalesce IS this API's contract — a rebalance
@@ -1652,13 +1663,12 @@ object Snapshots {
     // reaches them. Eras commit separately (one OCC-chained version
     // each, current era last); the operation is idempotent, so a crash
     // between era commits re-runs to completion.
-    val eras = manifestDF(spark, table, baseV)
-      .where(!isDelete(col("kind")))
+    val mdf = manifestDF(spark, table, baseV)
+    val eras = mdf.where(!isDelete(col("kind")))
       .select(coalesce(col("spec"), lit(partCol)).as("s")).distinct()
       .as[String].collect().sorted
       .sortBy(_ == partCol) // current era commits LAST (tie to caller)
     val sch = schemaOf(spark, table, baseV)
-    val morDels = activeDeletes(spark, table, baseV)
     var touched = 0
     // OCC across the era chain: every pin resolves against baseV (each
     // era commit tombstones only its OWN era's partitions, so baseV's
@@ -1677,31 +1687,25 @@ object Snapshots {
       val eraPred =
         if (eraCol == partCol) col("spec").isNull || col("spec") === eraCol
         else col("spec") === eraCol
-      val eraPaths = manifestDF(spark, table, baseV)
-        .where(eraPred && keyPrune)
-        .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-        .as[(String, Int)].collect().toSeq
-      if (eraPaths.nonEmpty) {
+      val eraPin = pin(mdf, eraPred && keyPrune)
+      if (eraPin.data.nonEmpty) {
         // MoR-filtered: the rewrite's fresh seq makes older delete
         // files inert for these partitions — rows they suppressed must
         // not ride back in through the copy-on-write scan
-        val eraRows = morScan(spark, table, eraPaths, morDels, sch)
-        val affected = eraRows
+        val affected = scanPin(spark, table, eraPin, sch)
           .join(keys.select(keyCol), Seq(keyCol), "left_semi")
           .select(col(eraCol).cast("string")).distinct()
           .as[String].collect().sorted
         if (affected.nonEmpty) {
-          val mine = manifestDF(spark, table, baseV)
-            .where(eraPred && col("partition").isin(affected.toSeq: _*))
-            .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-            .as[(String, Int)].collect().toSeq
-          val kept = morScan(spark, table, mine, morDels, sch)
+          val mine = pin(mdf,
+            eraPred && col("partition").isin(affected.toSeq: _*))
+          val kept = scanPin(spark, table, mine, sch)
             .join(keys.select(keyCol), Seq(keyCol), "left_anti")
           // statsCols must survive the rewrite: a compaction that
           // dropped the manifest min/max of the store's range column
           // would silently turn every later stats-pruned read
           // (readRange / readWhere) into a full-file scan of the
-          // rewritten partitions — overlapCol fails open, so answers
+          // rewritten partitions — pruneColOpt fails open, so answers
           // stay right while the targeted-read contract rots
           expect = commitOverwritePartitions(kept, table, eraCol,
             affected.toSeq, statsCols, expectedPrev = Some(expect))
@@ -1756,7 +1760,10 @@ object Snapshots {
     // concurrent commit between this read and the publish must fail
     // the merge — retry from a fresh read — never be silently dropped
     val baseV = currentVersion(spark, table)
-    val target = readAsOf(spark, table, baseV)
+    val mdf = manifestDF(spark, table, baseV)
+    val sch = schemaOf(spark, table, baseV)
+    // the version's columns, as an empty frame: no data file pinned
+    val target = scanPin(spark, table, pin(mdf, lit(false)), sch)
     Seq(keyCol, partCol, opCol).foreach(c =>
       require(changes0.columns.contains(c),
         s"Snapshots.mergeRows: change batch must carry '$c'"))
@@ -1784,10 +1791,7 @@ object Snapshots {
     // [[deleteRows]]. One metadata probe when single-era (the common
     // case), one bounded semi-join otherwise.
     val eraPred = col("spec").isNull || col("spec") === lit(partCol)
-    val sch = schemaOf(spark, table, baseV)
-    val otherEraPaths = manifestDF(spark, table, baseV)
-      .where(!eraPred && !isDelete(col("kind")))
-      .select("path").as[String].collect().toSeq
+    val otherEraPaths = pin(mdf, !eraPred).data.map(_._1)
     if (otherEraPaths.nonEmpty) {
       val hit = scanPaths(spark, table, otherEraPaths, sch)
         .join(changes.select(keyCol), Seq(keyCol), "left_semi")
@@ -1804,15 +1808,8 @@ object Snapshots {
     // key, so the probe scans O(candidate files), not the table (the
     // MoR filter still applies — a partition whose only matching rows
     // are delete-suppressed must not be rewritten for them)
-    val probePaths = manifestDF(spark, table, baseV)
-      .where(eraPred && !isDelete(col("kind")) &&
-        keyRangePrune(changes, keyCol))
-      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-      .as[(String, Int)].collect().toSeq
-    val probe =
-      if (probePaths.isEmpty) target.where(lit(false))
-      else morScan(spark, table, probePaths,
-        activeDeletes(spark, table, baseV), sch)
+    val probe = scanPin(spark, table,
+      pin(mdf, eraPred && keyRangePrune(changes, keyCol)), sch)
     val matched = probe
       .join(changes.select(keyCol), Seq(keyCol), "left_semi")
       .select(col(partCol).cast("string"))
@@ -1828,16 +1825,11 @@ object Snapshots {
     // is ERA-SCOPED: a colliding-value other-era file must keep serving
     // its own era, not ride into this rewrite (the guard above ensures
     // no change key needs it).
-    val mine = manifestDF(spark, table, baseV)
-      .where(eraPred && col("partition").isin(affected.toSeq: _*))
-      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-      .as[(String, Int)].collect().toSeq
-    val pinned0 =
-      if (mine.isEmpty) target.where(lit(false)) // pure-insert batch
-      // MoR-filtered (the deleteRows rule): the merge rewrite's fresh
-      // seq must not resurrect rows an active delete file suppresses
-      else morScan(spark, table, mine,
-        activeDeletes(spark, table, baseV), sch)
+    // MoR-filtered (the deleteRows rule): the merge rewrite's fresh
+    // seq must not resurrect rows an active delete file suppresses; a
+    // pure-insert batch pins no file and scans an empty frame
+    val pinned0 = scanPin(spark, table,
+      pin(mdf, eraPred && col("partition").isin(affected.toSeq: _*)), sch)
     val pinned = batchNew.foldLeft(pinned0)((df, f) =>
       df.withColumn(f.name, lit(null).cast(f.dataType)))
     val merged = graft.operators.Merge
@@ -1882,46 +1874,66 @@ object Snapshots {
       Option(kb.getString(1)))
   }
 
-  /** ONE manifest resolution serving both halves of a MoR read —
-    * (data entries as (relPath, seq), delete files as (relPath,
-    * keyCol)). The first MoR cut probed delete files with a SEPARATE
-    * manifestDF collect per read, which taxed every read path — the
-    * bench's whole commit-inside-query class — by one manifest job
-    * even on tables that never saw a delete; the fused collect keeps
-    * reads at exactly one resolution, deletes or not. */
-  private def splitEntries(rows: Seq[(String, Int, String)])
-      : (Seq[(String, Int)], Seq[(String, String)]) = {
-    val (del, data) = rows.partition(r =>
-      r._3 != null && r._3.startsWith("delete:"))
-    (data.map(r => (r._1, r._2)),
+  /** One operation's pinned file set: the data files its prune kept,
+    * as (relPath, seq), and EVERY delete file of the version, as
+    * (relPath, keyCol) — a delete suppresses rows wherever they live.
+    * `mdf` is the resolution the pin came from. */
+  private[graft] case class Pin(mdf: DataFrame, data: Seq[(String, Int)],
+      dels: Seq[(String, String)])
+
+  /** The one manifest pin behind every version-pinned read, write-side
+    * probe and SQL scan: ONE targeted collect of (path, seq, kind) over
+    * the data rows `keep` selects plus all delete rows. An operation
+    * resolves [[manifestDF]] once and pins against that frame as often
+    * as it needs; only the kept entries reach the driver, never the
+    * full manifest. */
+  private def pin(mdf: DataFrame, keep: Column): Pin = {
+    val spark = mdf.sparkSession
+    import spark.implicits._
+    val (del, data) = mdf.where(isDelete(col("kind")) || keep)
+      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
+        col("kind"))
+      .as[(String, Int, String)].collect().toSeq
+      .partition(r => r._3 != null && r._3.startsWith("delete:"))
+    Pin(mdf, data.map(r => (r._1, r._2)),
       del.map(r => (r._1, r._3.stripPrefix("delete:"))))
   }
 
-  private def allEntries(spark: SparkSession, table: String, v: Int)
-      : (Seq[(String, Int)], Seq[(String, String)]) = {
-    import spark.implicits._
-    splitEntries(manifestDF(spark, table, v)
-      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-        col("kind"))
-      .as[(String, Int, String)].collect().toSeq)
-  }
+  /** Scan a [[Pin]] — the MoR read: its data files with every row its
+    * delete files match suppressed (delete sets are small by contract
+    * — that's what [[compactDeletes]] is for — so the anti-joins
+    * broadcast and the scan never shuffles; with no delete active the
+    * plain multi-file parquet scan comes back untouched). When the
+    * prune kept no data file, an empty frame with the version's schema
+    * (one limit-1 path probe of the pin's own resolution supplies it
+    * for tables that predate schema tracking). */
+  private[graft] def scanPin(spark: SparkSession, table: String, p: Pin,
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    if (p.data.isEmpty) {
+      import spark.implicits._
+      val one = p.mdf.where(!isDelete(col("kind"))).select("path")
+        .limit(1).as[String].collect().toSeq
+      scanPaths(spark, table, one, schema).where(lit(false))
+    } else {
+      val base = scanPaths(spark, table, p.data.map(_._1), schema)
+      if (p.dels.isEmpty) base
+      else morJoin(spark, table, morTag(spark, base, p.data), p.dels,
+        "left_anti").drop("_grel", "_gseq")
+    }
 
-  /** Version `v`'s active delete files as (relPath, keyCol) — for the
-    * WRITE paths, which resolve the manifest separately anyway. */
-  private def activeDeletes(spark: SparkSession, table: String, v: Int)
-      : Seq[(String, String)] = {
-    import spark.implicits._
-    manifestDF(spark, table, v).where(isDelete(col("kind")))
-      .select(col("path"), col("kind")).as[(String, String)].collect()
-      .toSeq.map { case (p, k) => (p, k.stripPrefix("delete:")) }
+  /** One key column's delete files, read under their KNOWN schema — the
+    * key as `keyType` (the version schema's type, which
+    * [[deleteRowsMoR]] cast the keys to) and `_delseq` as an int — so
+    * planning a read never starts a footer schema-inference job. */
+  private def readDeleteKeys(spark: SparkSession, table: String,
+      files: Seq[(String, String)], keyCol: String,
+      keyType: org.apache.spark.sql.types.DataType): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    spark.read
+      .schema(StructType(Seq(StructField(keyCol, keyType),
+        StructField("_delseq", IntegerType))))
+      .parquet(files.map(f => s"$table/${f._1}"): _*)
   }
-
-  /** Does version `v` carry active merge-on-read delete files? (The
-    * SQL catalog refuses such versions — a DSv2 Scan cannot express
-    * the anti-join — and points at [[compactDeletes]].) */
-  private[graft] def hasMorDeletes(spark: SparkSession, table: String,
-      v: Int): Boolean =
-    activeDeletes(spark, table, v).nonEmpty
 
   /** Attach each row's data-file seq (`_gseq`): a broadcast
     * (relPath → seq) map joined on `input_file_name`. */
@@ -1957,29 +1969,14 @@ object Snapshots {
       : DataFrame =
     dels.groupBy(_._2).toSeq.sortBy(_._1)
       .foldLeft(tagged) { case (acc, (keyCol, files)) =>
-        val keys = spark.read
-          .parquet(files.map(f => s"$table/${f._1}"): _*)
+        val keys = readDeleteKeys(spark, table, files, keyCol,
+          acc.schema(keyCol).dataType)
           .withColumnRenamed(keyCol, "_gdelkey")
         acc.join(broadcast(keys),
           acc(keyCol) === keys("_gdelkey") &&
             keys("_delseq") > coalesce(acc("_gseq"), lit(0)),
           joinType)
       }
-
-  /** Scan `entries`' files and suppress rows matched by `dels` — the
-    * MoR read (delete sets are small by contract — that's what
-    * [[compactDeletes]] is for — so the anti-joins broadcast and the
-    * scan never shuffles). Zero overhead when no deletes are active:
-    * the plain multi-file parquet scan comes back untouched. */
-  private def morScan(spark: SparkSession, table: String,
-      entries: Seq[(String, Int)], dels: Seq[(String, String)],
-      schema: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
-    val base = scanPaths(spark, table, entries.map(_._1), schema)
-    if (dels.isEmpty) return base
-    morJoin(spark, table, morTag(spark, base, entries), dels,
-      "left_anti").drop("_grel", "_gseq")
-  }
 
   /** Merge-on-read row delete: commit version `v` adds ONE key-set
     * parquet (the distinct `keys`, stamped with `_delseq = v`) and
@@ -2041,7 +2038,8 @@ object Snapshots {
       statsCols: Seq[String] = Nil): Int = {
     import spark.implicits._
     val baseV = currentVersion(spark, table)
-    val (_, dels) = allEntries(spark, table, baseV)
+    val mdf = manifestDF(spark, table, baseV)
+    val dels = pin(mdf, lit(false)).dels
     if (dels.isEmpty) return 0
     // the fold commits under `partCol` for EVERY affected file, so a
     // legacy-era file (different spec) would be rewritten under the
@@ -2050,8 +2048,7 @@ object Snapshots {
     // the legacy files still suppressed. Refuse instead (the dual of
     // mergeRows' era guard); spec-evolved tables fold per era with
     // [[deleteRows]] first.
-    val foreign = manifestDF(spark, table, baseV)
-      .where(!isDelete(col("kind")) &&
+    val foreign = mdf.where(!isDelete(col("kind")) &&
         col("spec").isNotNull && col("spec") =!= partCol)
       .limit(1).count()
     require(foreign == 0L,
@@ -2068,16 +2065,13 @@ object Snapshots {
     // rows only one key column suppressed. Each group's probe is
     // key-range pruned against the manifest stats (fails open), so a
     // handful of tombstoned keys probe O(candidate files), not the
-    // table.
-    val mdf = manifestDF(spark, table, baseV)
+    // table. Delete files exist only on schema-tracked tables
+    // (deleteRowsMoR requires it), so `sch` types their keys.
     val affected = dels.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (kc, files) =>
-        val delKeys = spark.read
-          .parquet(files.map(f => s"$table/${f._1}"): _*).select(kc)
-        val pruned = mdf
-          .where(!isDelete(col("kind")) && keyRangePrune(delKeys, kc))
-          .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-          .as[(String, Int)].collect().toSeq
+        val delKeys = readDeleteKeys(spark, table, files, kc,
+          sch.get(kc).dataType)
+        val pruned = pin(mdf, keyRangePrune(delKeys, kc)).data
         if (pruned.isEmpty)
           spark.emptyDataset[String].toDF("_gpart")
         else
@@ -2095,18 +2089,17 @@ object Snapshots {
       // single-spec guard above makes manifest partition values
       // caller-spec, so the pin is exact); the residual row filter
       // stays as belt-and-braces
-      val mine = mdf
-        .where(!isDelete(col("kind")) &&
-          col("partition").isin(affected.toSeq: _*))
-        .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"))
-        .as[(String, Int)].collect().toSeq
-      val kept = morScan(spark, table, mine, dels, sch)
+      val mine = pin(mdf, col("partition").isin(affected.toSeq: _*))
+      val kept = scanPin(spark, table, mine, sch)
         .where(col(partCol).cast("string").isin(affected.toSeq: _*))
       expect = commitOverwritePartitions(kept, table, partCol,
         affected.toSeq, statsCols, expectedPrev = Some(expect))
     }
     // metadata-only drop of the (now inert) delete files: tombstone
-    // their unique `_del<v>` partitions under the reserved `_del` spec
+    // their unique `_del<v>` partitions under the reserved `_del` spec.
+    // OCC makes `prev` baseV or our own fold, which tombstoned only
+    // `partCol`-era partitions — so baseV's delete partitions are
+    // exactly prev's
     val prev = currentVersion(spark, table)
     val v = prev + 1
     reserve(spark, table, v)
@@ -2114,9 +2107,8 @@ object Snapshots {
       breakReservation(spark, table, v)
       throw new ConcurrentCommitException(table, v)
     }
-    val delParts = manifestDF(spark, table, prev)
-      .where(isDelete(col("kind"))).select("partition").distinct()
-      .as[String].collect().toSeq.sorted
+    val delParts = mdf.where(isDelete(col("kind"))).select("partition")
+      .distinct().as[String].collect().toSeq.sorted
     commitManifest(spark, table, v, prev, Nil, delParts, Some("_del"))
     schemaOf(spark, table, prev).foreach(writeSchema(spark, table, v, _))
     partSpecOf(spark, table, prev)
@@ -2129,8 +2121,7 @@ object Snapshots {
 
   private def scanPaths(spark: SparkSession, table: String,
       paths: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     require(paths.nonEmpty, s"Snapshots: empty file set under $table")
     // the version's recorded schema is passed EXPLICITLY: the reader
     // null-fills columns a pre-evolution file lacks, no per-file footer
@@ -2142,12 +2133,11 @@ object Snapshots {
   /** Read as of a PINNED version: the file set is resolved here, once,
     * so the returned frame keeps answering with version `v`'s rows no
     * matter how many commits land afterwards. Merge-on-read delete
-    * files of `v` are applied ([[morScan]]); versions without deletes
+    * files of `v` are applied ([[scanPin]]); versions without deletes
     * read as the plain multi-file scan. */
-  def readAsOf(spark: SparkSession, table: String, v: Int): DataFrame = {
-    val (data, dels) = allEntries(spark, table, v)
-    morScan(spark, table, data, dels, schemaOf(spark, table, v))
-  }
+  def readAsOf(spark: SparkSession, table: String, v: Int): DataFrame =
+    scanPin(spark, table, pin(manifestDF(spark, table, v), lit(true)),
+      schemaOf(spark, table, v))
 
   /** Read the latest snapshot — pinned at CALL time (the manifest is
     * resolved now), so a concurrent commit cannot make this frame see
@@ -2170,39 +2160,21 @@ object Snapshots {
       toV: Int): DataFrame = {
     require(fromV >= 0 && fromV <= toV,
       s"Snapshots.readChanges: need 0 <= fromV <= toV, got $fromV..$toV")
-    import spark.implicits._
     val to = manifestDF(spark, table, toV)
-    // the version diff is a left-anti join INSIDE the plan — neither
+    // the version diff is a left-outer join INSIDE the plan — neither
     // manifest materializes on the driver, only the added paths do.
     // Merge-on-read DELETE files are metadata, not rows: they never
-    // surface in the append stream, and `toV`'s deletes apply to the
-    // added data files (a key appended then MoR-deleted inside the
-    // range is not "added" at toV).
-    val flagged = (
+    // surface in the append stream, and ALL of `toV`'s deletes apply
+    // to the added data files (a key appended then MoR-deleted inside
+    // the range is not "added" at toV) — the pin keeps every delete
+    val flagged =
       if (fromV == 0) to.withColumn("_new", lit(true))
       else to.join(manifestDF(spark, table, fromV)
           .select(col("path"), lit(true).as("_old")),
           Seq("path"), "left_outer")
-        .withColumn("_new", col("_old").isNull).drop("_old")
-      )
-      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-        col("kind"), col("_new"))
-      .as[(String, Int, String, Boolean)].collect().toSeq
-    // one collect carries everything: the added data files AND toV's
-    // delete files (ALL of them — a delete from before the range still
-    // suppresses an added-then-deleted key at toV)
-    val (_, dels) = splitEntries(flagged.map(r => (r._1, r._2, r._3)))
-    val added = flagged
-      .filter(r => r._4 && (r._3 == null || !r._3.startsWith("delete:")))
-      .map(r => (r._1, r._2))
-    val sch = schemaOf(spark, table, toV)
-    if (added.isEmpty) {
-      // nothing new: an empty frame with the version's schema (one
-      // file resolves it when the table predates schema tracking)
-      val one = to.where(!isDelete(col("kind"))).select("path")
-        .limit(1).as[String].collect().toSeq
-      scanPaths(spark, table, one, sch).where(lit(false))
-    } else morScan(spark, table, added, dels, sch)
+        .withColumn("_new", col("_old").isNull)
+    scanPin(spark, table, pin(flagged, col("_new")),
+      schemaOf(spark, table, toV))
   }
 
   /** Row-level diff between two versions: (added, removed) frames via
@@ -2287,24 +2259,21 @@ object Snapshots {
   // ---- manifest-level stats pruning -----------------------------------
 
   /** Plan-side survival predicate for one column range over manifest
-    * rows: numeric stats compare in DECIMAL(38,18) — covers the full
-    * long range exactly (19 integer digits + 18 fractional ≤ 38); a
-    * magnitude that overflows the cast yields NULL and the file is
+    * rows, either bound optional: numeric stats compare in
+    * DECIMAL(38,18) — covers the full long range exactly (19 integer
+    * digits + 18 fractional ≤ 38); a magnitude that overflows the
+    * cast yields NULL and the file is
     * conservatively KEPT, as is any sub-1e-18 distinction the scale
     * rounds away (rounding is monotone, so collapsing toward equality
     * only ever widens the kept set — pruning can lose a sliver of
     * sharpness in pathological ranges, never a row). Strings / dates /
     * timestamps compare lexicographically (ISO order = value order).
-    * Files with no stats for the column, or all-null stats, are kept. */
-  private def overlapCol(c: String, lo: String, hi: String): Column =
-    pruneColOpt(c, Some(lo), Some(hi))
-
-  /** [[overlapCol]] generalized to OPTIONAL bounds — the shared survival
-    * predicate for both the library reads ([[readWhere]], both bounds)
-    * and the SQL catalog's pushed filters (one-sided `>=`/`<=`
-    * comparisons push one bound each; their conjunction equals the
-    * two-sided overlap, which is what keeps the SQL scan's file set
-    * identical to [[readRange]]'s — SnapshotCatalogSpec pins it). */
+    * Files with no stats for the column, or all-null stats, are kept.
+    * Shared by the library reads ([[readWhere]], both bounds) and the
+    * SQL catalog's pushed filters (one-sided `>=`/`<=` comparisons push
+    * one bound each; their conjunction equals the two-sided overlap,
+    * which is what keeps the SQL scan's file set identical to
+    * [[readRange]]'s — SnapshotCatalogSpec pins it). */
   private[graft] def pruneColOpt(c: String, lo: Option[String],
       hi: Option[String]): Column = {
     val st = col("stats").getItem(c)
@@ -2384,58 +2353,18 @@ object Snapshots {
     }
   }
 
-  /** Planning-time file pruning for the SQL catalog: the data-file
-    * paths of version `v` (ABSOLUTE) that could satisfy every pushed
-    * filter, decided from manifest stats + era-aware partition values —
-    * no parquet footer opened. Conservative by construction: an
+  /** The SQL catalog's scan pin: version `v`'s data files that could
+    * satisfy every pushed filter, decided from manifest stats +
+    * era-aware partition values — no parquet footer opened — plus the
+    * version's delete files. Conservative by construction: an
     * untranslatable filter keeps all files; correctness rides on
     * Spark's residual Filter, pruning only cuts IO. */
-  private[graft] def sqlPrunedPaths(spark: SparkSession, table: String,
-      v: Int, filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Seq[String] = {
-    import spark.implicits._
+  private[graft] def sqlPin(spark: SparkSession, table: String, v: Int,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Pin = {
     val partCol = partSpecOf(spark, table, v)
-    val preds = filters.flatMap(pruneFilter(_, partCol))
-    // delete-file entries never reach the file scan: their parquet
-    // shape is the key set, not the table schema (when a version
-    // carries active deletes the SQL path routes through
-    // [[sqlMorScan]] instead, but the guard keeps this leg safe
-    // regardless)
-    val mdf = manifestDF(spark, table, v).where(!isDelete(col("kind")))
-    val pruned = if (preds.isEmpty) mdf else mdf.where(preds.reduce(_ && _))
-    pruned.select("path").as[String].collect().toSeq
-      .map(p => s"$table/$p")
-  }
-
-  /** The SQL catalog's merge-on-read leg: version `v`'s rows with its
-    * delete files APPLIED, file-pruned by the pushed filters exactly
-    * like [[sqlPrunedPaths]] (delete files always ride along — a
-    * delete suppresses rows in any surviving file). Returned as a
-    * DataFrame because a plain DSv2 file Scan cannot express the
-    * seq-guarded anti-join; the catalog bridges it through a
-    * `V1Scan`, and all pushed filters stay residual above it, so
-    * pruning here only cuts IO. */
-  private[graft] def sqlMorScan(spark: SparkSession, table: String,
-      v: Int, filters: Seq[org.apache.spark.sql.sources.Filter])
-      : DataFrame = {
-    import spark.implicits._
-    val partCol = partSpecOf(spark, table, v)
-    val preds = filters.flatMap(pruneFilter(_, partCol))
-    val mdf = manifestDF(spark, table, v)
-    val keepPred =
-      if (preds.isEmpty) !isDelete(col("kind"))
-      else !isDelete(col("kind")) && preds.reduce(_ && _)
-    val (keep, dels) = splitEntries(
-      mdf.where(isDelete(col("kind")) || keepPred)
-        .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-          col("kind"))
-        .as[(String, Int, String)].collect().toSeq)
-    val sch = schemaOf(spark, table, v)
-    if (keep.isEmpty) {
-      val one = mdf.where(!isDelete(col("kind"))).select("path")
-        .limit(1).as[String].collect().toSeq
-      scanPaths(spark, table, one, sch).where(lit(false))
-    } else morScan(spark, table, keep, dels, sch)
+    pin(manifestDF(spark, table, v),
+      filters.flatMap(pruneFilter(_, partCol)).reduceOption(_ && _)
+        .getOrElse(lit(true)))
   }
 
   /** Files of version `v` that COULD hold rows with `c` in [lo, hi] —
@@ -2445,7 +2374,7 @@ object Snapshots {
   def prunedFiles(spark: SparkSession, table: String, v: Int, c: String,
       lo: String, hi: String): Seq[FileEntry] = {
     import spark.implicits._
-    manifestDF(spark, table, v).where(overlapCol(c, lo, hi))
+    manifestDF(spark, table, v).where(pruneColOpt(c, Some(lo), Some(hi)))
       .as[FileEntry].collect().toSeq
   }
 
@@ -2470,7 +2399,6 @@ object Snapshots {
     * immediately, legacy data serves unrewritten. */
   def readPartition(spark: SparkSession, table: String, partCol: String,
       value: String): DataFrame = {
-    import spark.implicits._
     val v = currentVersion(spark, table)
     val sch = schemaOf(spark, table, v)
     require(sch.forall(_.fieldNames.contains(partCol)),
@@ -2480,25 +2408,10 @@ object Snapshots {
     // null-valued comparison
     val sameEra = col("spec").isNotNull && col("spec") === lit(partCol)
     val otherEra = col("spec").isNull || col("spec") =!= lit(partCol)
-    val pred = (sameEra && col("partition") === lit(value)) ||
-      (otherEra && overlapCol(partCol, value, value))
-    val mdf = manifestDF(spark, table, v)
-    // ONE resolution: surviving data files AND the version's delete
-    // files (kept unconditionally — a delete suppresses rows wherever
-    // they live) ride the same collect
-    val (keep, dels) = splitEntries(
-      mdf.where(isDelete(col("kind")) || pred)
-        .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-          col("kind"))
-        .as[(String, Int, String)].collect().toSeq)
-    if (keep.isEmpty) {
-      val one = mdf.where(!isDelete(col("kind"))).select("path")
-        .limit(1).as[String].collect().toSeq
-      scanPaths(spark, table, one, sch).where(lit(false))
-    } else {
-      val kept = morScan(spark, table, keep, dels, sch)
-      kept.where(col(partCol).cast("string") === value)
-    }
+    val keep = (sameEra && col("partition") === lit(value)) ||
+      (otherEra && pruneColOpt(partCol, Some(value), Some(value)))
+    scanPin(spark, table, pin(manifestDF(spark, table, v), keep), sch)
+      .where(col(partCol).cast("string") === value)
   }
 
   /** Conjunctive multi-column pruned read: a file survives only if its
@@ -2509,35 +2422,16 @@ object Snapshots {
   def readWhere(spark: SparkSession, table: String,
       ranges: Map[String, (String, String)]): DataFrame = {
     require(ranges.nonEmpty, "Snapshots.readWhere: no ranges given")
-    import spark.implicits._
     val v = currentVersion(spark, table)
-    val mdf = manifestDF(spark, table, v)
-    val pred = ranges.map { case (c, (lo, hi)) => overlapCol(c, lo, hi) }
-      .reduce(_ && _)
-    // pruning runs inside the manifest plan; the driver holds only the
-    // surviving paths (and, on a fully-pruned read, the single path
-    // needed to resolve the table schema)
-    val sch = schemaOf(spark, table, v)
-    // delete files ride the same collect (kept unconditionally: their
-    // key columns carry no stats, and a delete suppresses rows in any
-    // surviving file)
-    val (keep, dels) = splitEntries(
-      mdf.where(isDelete(col("kind")) || pred)
-        .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-          col("kind"))
-        .as[(String, Int, String)].collect().toSeq)
-    if (keep.isEmpty) {
-      val one = mdf.where(!isDelete(col("kind"))).select("path")
-        .limit(1).as[String].collect().toSeq
-      scanPaths(spark, table, one, sch).where(lit(false))
-    } else {
-      val kept = morScan(spark, table, keep, dels, sch)
-      val residual = ranges.map { case (c, (lo, hi)) =>
-        col(c) >= lit(lo).cast(kept.schema(c).dataType) &&
-          col(c) <= lit(hi).cast(kept.schema(c).dataType)
-      }.reduce(_ && _)
-      kept.where(residual)
-    }
+    val keep = ranges.map { case (c, (lo, hi)) =>
+      pruneColOpt(c, Some(lo), Some(hi))
+    }.reduce(_ && _)
+    val kept = scanPin(spark, table, pin(manifestDF(spark, table, v), keep),
+      schemaOf(spark, table, v))
+    kept.where(ranges.map { case (c, (lo, hi)) =>
+      val t = kept.schema(c).dataType
+      col(c) >= lit(lo).cast(t) && col(c) <= lit(hi).cast(t)
+    }.reduce(_ && _))
   }
 
   /** Disjunctive pruned read — ONE manifest resolution serving a whole
@@ -2554,28 +2448,13 @@ object Snapshots {
   def readIn(spark: SparkSession, table: String, c: String,
       values: Seq[String]): DataFrame = {
     require(values.nonEmpty, "Snapshots.readIn: no values given")
-    import spark.implicits._
     val v = currentVersion(spark, table)
-    val mdf = manifestDF(spark, table, v)
-    val pred = values.map(x => overlapCol(c, x, x)).reduce(_ || _)
-    val sch = schemaOf(spark, table, v)
-    // delete files ride the same collect (kept unconditionally), as in
-    // readWhere
-    val (keep, dels) = splitEntries(
-      mdf.where(isDelete(col("kind")) || pred)
-        .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-          col("kind"))
-        .as[(String, Int, String)].collect().toSeq)
-    if (keep.isEmpty) {
-      val one = mdf.where(!isDelete(col("kind"))).select("path")
-        .limit(1).as[String].collect().toSeq
-      scanPaths(spark, table, one, sch).where(lit(false))
-    } else {
-      val kept = morScan(spark, table, keep, dels, sch)
-      val t = kept.schema(c).dataType
-      kept.where(values.map(x => col(c) === lit(x).cast(t))
-        .reduce(_ || _))
-    }
+    val keep = values.map(x => pruneColOpt(c, Some(x), Some(x)))
+      .reduce(_ || _)
+    val kept = scanPin(spark, table, pin(manifestDF(spark, table, v), keep),
+      schemaOf(spark, table, v))
+    val t = kept.schema(c).dataType
+    kept.where(values.map(x => col(c) === lit(x).cast(t)).reduce(_ || _))
   }
 
   /** Register the CURRENT snapshot as a temp view so `spark.sql` works

@@ -5,7 +5,7 @@ import java.util
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -51,22 +51,24 @@ import graft.io.Snapshots
   *
   * Scan planning is the engine's own: pushed filters prune the
   * version's MANIFEST (per-file min/max stats + era-aware partition
-  * values, [[Snapshots.sqlPrunedPaths]]) so whole files are skipped
-  * without opening a footer, then the surviving file list is handed to
-  * Spark's native vectorized parquet scan ([[ParquetTable]]) for
-  * column pruning and execution — identical file-skipping to
-  * [[Snapshots.readRange]] (SnapshotCatalogSpec pins set-equality),
-  * identical row-reading machinery to every other parquet scan in the
-  * engine. All pushed filters are also kept as residuals, so pruning
-  * can only cut IO, never change answers.
+  * values, [[Snapshots.sqlPin]]) so whole files are skipped without
+  * opening a footer — ONE manifest resolution per scan, at scan build.
+  * The surviving file list is handed to Spark's native vectorized
+  * parquet scan ([[ParquetTable]]) for column pruning and execution —
+  * identical file-skipping to [[Snapshots.readRange]]
+  * (SnapshotCatalogSpec pins set-equality), identical row-reading
+  * machinery to every other parquet scan in the engine. All pushed
+  * filters are also kept as residuals, so pruning can only cut IO,
+  * never change answers.
   *
   * A version carrying MERGE-ON-READ delete files is served, not
-  * refused: the scan routes through a [[V1Scan]] bridge onto
-  * [[Snapshots.sqlMorScan]] — the library's seq-guarded anti-join
-  * (still manifest-pruned by the pushed filters, which stay residual
-  * above the bridge) — because a plain DSv2 file scan cannot express
-  * the delete application. CDC-heavy tables stay on SQL between
-  * folds; [[Snapshots.compactDeletes]] restores the vectorized path.
+  * refused: when the pin holds delete files the scan routes through a
+  * [[V1Scan]] bridge onto [[Snapshots.scanPin]] — the library's
+  * seq-guarded anti-join over the same pruned files, with the pushed
+  * filters residual above the bridge — because a plain DSv2 file scan
+  * cannot express the delete application. CDC-heavy tables stay on
+  * SQL between folds; [[Snapshots.compactDeletes]] restores the
+  * vectorized path.
   *
   * Writes: `INSERT INTO` appends and `INSERT OVERWRITE` replaces the
   * table — both through the LIBRARY's transactional commits
@@ -161,8 +163,7 @@ class SnapshotCatalog extends TableCatalog {
     val path = tablePath(ident)
     if (!isSnapshotTable(path)) throw new NoSuchTableException(ident)
     val v = Snapshots.versionAsOfTime(spark, path, timestampMicros / 1000L)
-    new SnapshotSqlTable(fullName(ident), path, v, timeTravel = true,
-      morDeletes = Snapshots.hasMorDeletes(spark, path, v))
+    new SnapshotSqlTable(fullName(ident), path, v, timeTravel = true)
   }
 
   private def fullName(ident: Identifier): String =
@@ -182,8 +183,7 @@ class SnapshotCatalog extends TableCatalog {
         .getOrElse(Snapshots.versionOfRef(spark, path, s))
     }
     new SnapshotSqlTable(fullName(ident), path, v,
-      timeTravel = version.isDefined,
-      morDeletes = Snapshots.hasMorDeletes(spark, path, v))
+      timeTravel = version.isDefined)
   }
 
   /** `CREATE TABLE [AS SELECT]`: STAGE the table — write a
@@ -316,11 +316,9 @@ private[sources] object SnapshotCatalog {
   * set's own schema for pre-tracking tables. `timeTravel` marks a
   * handle resolved through VERSION/TIMESTAMP AS OF — readable, never
   * writable or deletable (writing "into the past" has no meaning in a
-  * linear version history). `morDeletes` routes the scan through the
-  * merge-on-read V1 bridge. */
+  * linear version history). */
 private[sources] class SnapshotSqlTable(tableName: String,
-    path: String, version: Int, timeTravel: Boolean = false,
-    morDeletes: Boolean = false)
+    path: String, version: Int, timeTravel: Boolean = false)
     extends Table with SupportsRead with SupportsWrite
     with SupportsDelete {
 
@@ -338,7 +336,7 @@ private[sources] class SnapshotSqlTable(tableName: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new SnapshotScanBuilder(path, version, schema, morDeletes, options)
+    new SnapshotScanBuilder(path, version, schema, options)
 
   /** SQL `DELETE FROM t WHERE key IN (…)`: the predicate becomes a
     * key set ([[SnapshotCatalog.deleteKeySet]]) and the delete is
@@ -451,17 +449,16 @@ private[sources] class StagedSqlTable(tableName: String, path: String,
 }
 
 /** Pushdown seam: pushed filters drive MANIFEST pruning (file-level
-  * skip, [[Snapshots.sqlPrunedPaths]]); every filter is also returned
-  * as residual, so answers never depend on pruning; the pruned file
-  * list then becomes a native [[ParquetTable]] scan (vectorized read +
-  * column pruning — `pruneColumns` passes straight through). When the
-  * version carries active merge-on-read deletes, `build()` returns a
-  * [[V1Scan]] over [[Snapshots.sqlMorScan]] instead — same manifest
-  * pruning, plus the seq-guarded delete anti-join a plain file scan
-  * cannot express; the residual filters still run above it. */
+  * skip); every filter is also returned as residual, so answers never
+  * depend on pruning. `build()` pins the version once
+  * ([[Snapshots.sqlPin]]) and routes on what the pin holds: no delete
+  * files → a native [[ParquetTable]] scan of the pruned file list
+  * (vectorized read + column pruning — `pruneColumns` passes straight
+  * through); delete files → a [[V1Scan]] over [[Snapshots.scanPin]],
+  * the seq-guarded delete anti-join a plain file scan cannot express,
+  * with the residual filters still running above it. */
 private[sources] class SnapshotScanBuilder(path: String, version: Int,
-    tableSchema: StructType, morDeletes: Boolean,
-    options: CaseInsensitiveStringMap)
+    tableSchema: StructType, options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
@@ -480,9 +477,16 @@ private[sources] class SnapshotScanBuilder(path: String, version: Int,
 
   override def build(): Scan = {
     val spark = SparkSession.active
-    if (morDeletes) {
+    val pin = Snapshots.sqlPin(spark, path, version, pushed.toSeq)
+    if (pin.dels.isEmpty) {
+      val pt = ParquetTable(s"graft-snap $path@v$version", spark, options,
+        pin.data.map(d => s"$path/${d._1}"), Some(tableSchema),
+        classOf[ParquetFileFormat])
+      val inner = pt.newScanBuilder(options)
+      inner.pruneColumns(required)
+      inner.build()
+    } else {
       val req = required
-      val flt = pushed.toSeq
       new V1Scan {
         override def readSchema(): StructType = req
         override def toV1TableScan[T <: BaseRelation with TableScan](
@@ -490,21 +494,12 @@ private[sources] class SnapshotScanBuilder(path: String, version: Int,
           new BaseRelation with TableScan {
             override def sqlContext: SQLContext = context
             override def schema: StructType = req
-            override def buildScan(): RDD[Row] = {
-              val df: DataFrame = Snapshots.sqlMorScan(
-                context.sparkSession, path, version, flt)
-              df.select(req.fieldNames.toIndexedSeq.map(col): _*).rdd
-            }
+            override def buildScan(): RDD[Row] =
+              Snapshots.scanPin(context.sparkSession, path, pin,
+                Some(tableSchema))
+                .select(req.fieldNames.toIndexedSeq.map(col): _*).rdd
           }.asInstanceOf[T]
       }
-    } else {
-      val paths = Snapshots.sqlPrunedPaths(spark, path, version,
-        pushed.toSeq)
-      val pt = ParquetTable(s"graft-snap $path@v$version", spark,
-        options, paths, Some(tableSchema), classOf[ParquetFileFormat])
-      val inner = pt.newScanBuilder(options)
-      inner.pruneColumns(required)
-      inner.build()
     }
   }
 }

@@ -1,5 +1,9 @@
 package graft.io
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,6 +30,34 @@ class SnapshotsMorSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     df.select("id").as[String].collect().toSet
+  }
+
+  /** Spark jobs `body` starts on this thread. Its jobs carry a fresh
+    * job group; a marker job in a second group follows, and the
+    * listener bus delivers in order, so once the marker is seen every
+    * job of `body` has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"plan-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger(0)
+    val marker = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
+          .foreach { g =>
+            if (g == group) jobs.incrementAndGet()
+            else if (g == s"$group-marker") marker.countDown()
+          }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "planning")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
+      jobs.get
+    } finally sc.removeSparkListener(l)
   }
 
   test("a 1-key MoR delete commits O(tombstone): one added key file, " +
@@ -277,5 +309,64 @@ class SnapshotsMorSpec extends SparkSpec {
       "after the fold drops its manifest entry, vacuum reclaims the " +
         "delete file")
     assert(ids(Snapshots.read(spark, t)) == Set("d1-1", "d1-3"))
+  }
+
+  test("planning a pinned read starts no Spark job, with or without an " +
+      "active delete file (delete keys are read under their known " +
+      "schema, never footer-inferred)") {
+    val t = tmpDir("mor_plan_jobs")
+    Snapshots.commitFull(
+      rows("d1", 1 to 3, 0).unionByName(rows("d2", 1 to 3, 100)), t, "day",
+      statsCols = Seq("cents"))
+    def planJobs(): Map[String, Int] = Map(
+      "readPartition" -> jobsStartedBy(
+        Snapshots.readPartition(spark, t, "day", "d1")),
+      "readIn" -> jobsStartedBy(
+        Snapshots.readIn(spark, t, "cents", Seq("1", "101"))),
+      "readRange" -> jobsStartedBy(
+        Snapshots.readRange(spark, t, "cents", "0", "50")),
+      "readAsOf" -> jobsStartedBy(Snapshots.readAsOf(spark, t,
+        Snapshots.currentVersion(spark, t))))
+    assert(planJobs().values.forall(_ == 0),
+      s"plain table: ${planJobs()}")
+    Snapshots.deleteRowsMoR(spark, t, "id", keyDf("d1-2"))
+    val withDeletes = planJobs()
+    assert(withDeletes.values.forall(_ == 0),
+      s"active delete file: $withDeletes")
+    // the typed delete-key read still answers
+    assert(ids(Snapshots.readPartition(spark, t, "day", "d1")) ==
+      Set("d1-1", "d1-3"))
+  }
+
+  test("the empty-version guard counts DATA files only: a fold or a " +
+      "copy-on-write delete that would leave only delete files is " +
+      "refused, its slot released, and reads stay at the old version") {
+    // every row MoR-deleted, then folded: the rewrite empties the table
+    val t1 = tmpDir("mor_empty_fold")
+    Snapshots.commitFull(rows("d1", 1 to 2, 0), t1, "day")
+    Snapshots.deleteRowsMoR(spark, t1, "id", keyDf("d1-1", "d1-2"))
+    intercept[IllegalArgumentException] {
+      Snapshots.compactDeletes(spark, t1, "day")
+    }
+    assert(Snapshots.currentVersion(spark, t1) == 2)
+    assert(ids(Snapshots.read(spark, t1)).isEmpty)
+    assert(ids(Snapshots.readPartition(spark, t1, "day", "d1")).isEmpty)
+    assert(Snapshots.commitAppend(rows("d2", 1 to 1, 0), t1, "day") == 3,
+      "the refused commit released its reservation")
+    // copy-on-write delete of every live key while a delete file is
+    // active: only the delete file would survive
+    val t2 = tmpDir("mor_empty_cow")
+    Snapshots.commitFull(
+      rows("d1", 1 to 3, 0).unionByName(rows("d2", 1 to 2, 100)), t2, "day")
+    Snapshots.deleteRowsMoR(spark, t2, "id", keyDf("d1-3"))
+    intercept[IllegalArgumentException] {
+      Snapshots.deleteRows(spark, t2, "day", "id",
+        keyDf("d1-1", "d1-2", "d2-1", "d2-2"))
+    }
+    assert(Snapshots.currentVersion(spark, t2) == 2)
+    assert(ids(Snapshots.read(spark, t2)) ==
+      Set("d1-1", "d1-2", "d2-1", "d2-2"))
+    assert(Snapshots.deleteRowsMoR(spark, t2, "id", keyDf("d2-2")) == 3,
+      "the refused commit released its reservation")
   }
 }

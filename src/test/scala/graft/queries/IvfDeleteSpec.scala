@@ -86,7 +86,7 @@ class IvfDeleteSpec extends SparkSpec {
     val cur = Snapshots.currentVersion(spark, t)
     val entries = Snapshots.readManifest(spark, t, cur)
     // deleteRows must forward statsCols — a rewrite that dropped the
-    // 'cell' min/max would fail open in overlapCol and silently turn
+    // 'cell' min/max would fail open in pruneColOpt and silently turn
     // every post-compaction targeted read into a full scan
     assert(entries.forall(_.stats.contains("cell")),
       "a rewritten file lost its 'cell' manifest stats")

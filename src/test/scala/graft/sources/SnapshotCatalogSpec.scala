@@ -209,7 +209,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     val c = catalog(root)
     assert(spark.sql(s"SELECT id FROM $c.cdc").as[String].collect()
       .toSet == Snapshots.read(spark, t).select("id").as[String]
-      .collect().toSet, "SQL ≡ library morScan row set")
+      .collect().toSet, "SQL ≡ library scanPin row set")
     assert(spark.sql(
       s"SELECT id, cents FROM $c.cdc WHERE day = 'd1' AND cents < 3")
       .as[(String, Long)].collect().toSet == Set(("d1-1", 1L)),
