@@ -20,6 +20,10 @@ object Anomaly {
     * trailing week" — wide enough to ignore weekday seasonality. */
   val DefaultThreshold = 0.5
 
+  /** A type's batch share may be at most this factor above or below its
+    * trailing-week share before [[typeDriftWarning]] flags it. */
+  val DefaultDriftFactor = 2
+
   /** Per-day volumes with trailing-7-day baseline and anomaly flag:
     * (event_date, n, baseline, is_anomaly). The window is global but its
     * cardinality is one row per DATE — bounded by the calendar, not the
@@ -118,6 +122,56 @@ object Anomaly {
       .withColumn("is_gap_alert", col("max_gap_s") > alertGapSeconds)
   }
 
+  /** The trailing curated week as the two pipeline checks need it: one
+    * row count per listed day (a listed day with no rows counts as a
+    * 0-row day) and each event type's count over the whole week (a null
+    * type keys `null`). */
+  private final case class Week(dayRows: Seq[Long],
+      typeCounts: Map[String, Long])
+
+  /** Read the 7 days before `ingestionDate` in ONE Spark query. The day
+    * dirs are listed on the driver; the query reads only `event_type`
+    * under an explicit schema (no footer schema-inference job) and
+    * groups by (day, type), so its job count does not grow with the
+    * number of days.
+    *
+    * Best-effort: a trailing partition being REWRITTEN by a concurrent
+    * backfill date is transiently unreadable (purged dir / mid-flip). A
+    * failed read yields no history — what a run sees before any
+    * trailing day lands. Warnings never gate, so absence is the safe
+    * degradation, not an error to propagate. */
+  private def trailingWeek(spark: SparkSession, curatedBase: String,
+      ingestionDate: String): Week = {
+    val date = java.time.LocalDate.parse(ingestionDate)
+    val days = (1 to 7).map(b => date.minusDays(b.toLong).toString)
+      .filter(d => graft.io.CuratedWriter.upstreamExists(spark,
+        RawEvents.partitionPath(curatedBase, d)))
+    val none = Week(Nil, Map.empty)
+    if (days.isEmpty) return none
+    scala.util.Try {
+      val rows = spark.read.schema("event_type STRING")
+        .option("basePath", curatedBase)
+        .parquet(days.map(RawEvents.partitionPath(curatedBase, _)): _*)
+        .groupBy(col("ingestion_date").cast("string"), col("event_type"))
+        .count().collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      def sums(key: ((String, String, Long)) => String) =
+        rows.groupBy(key).map { case (k, xs) => k -> xs.map(_._3).sum }
+      val perDay = sums(_._1)
+      Week(days.map(perDay.getOrElse(_, 0L)), sums(_._2))
+    }.getOrElse(none)
+  }
+
+  /** Both pipeline checks over ONE read of the trailing week: the
+    * [[volumeWarning]] (if any) followed by the [[typeDriftWarning]]s. */
+  def trailingWeekWarnings(spark: SparkSession, curatedBase: String,
+      ingestionDate: String, batchRows: Long,
+      batchTypeCounts: Map[String, Long]): Seq[String] = {
+    val week = trailingWeek(spark, curatedBase, ingestionDate)
+    volumeWarning(week, batchRows, DefaultThreshold).toSeq ++
+      typeDriftWarning(week, batchTypeCounts, DefaultDriftFactor)
+  }
+
   /** Pipeline-shaped drift check: ONE batch's per-type counts against
     * the trailing curated week's. History reads touch one
     * dictionary-encoded column (`event_type`) per partition — a
@@ -128,62 +182,50 @@ object Anomaly {
     * (no overflow, no shares divided — same exactness story as
     * [[typeDrift]]). Types absent from the baseline or the batch are
     * skipped: appearance/disappearance is a schema-ish event the domain
-    * counter D-checks own, drift is about SHARE shifts. */
+    * counter D-checks own, drift is about SHARE shifts. A null type
+    * (keyed `null` in `batchTypeCounts`) has no baseline either: its
+    * rows count toward the batch total only — the null-type gate rule
+    * owns them. */
   def typeDriftWarning(spark: SparkSession, curatedBase: String,
       ingestionDate: String, batchTypeCounts: Map[String, Long],
-      factor: Int = 2): Seq[String] = {
-    val date = java.time.LocalDate.parse(ingestionDate)
-    // best-effort history: a trailing partition being REWRITTEN by a
-    // concurrent backfill date is transiently unreadable (purged dir /
-    // empty dir mid-write) — it reads as absent, exactly what a
-    // sequential run sees before that date lands. Warnings never gate,
-    // so absence is the safe degradation, not an error to propagate.
-    val hist = (1 to 7).flatMap { back =>
-      val d = date.minusDays(back.toLong).toString
-      val path = RawEvents.partitionPath(curatedBase, d)
-      if (graft.io.CuratedWriter.upstreamExists(spark, path))
-        scala.util.Try(
-          spark.read.parquet(path).groupBy("event_type").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)))
-          .getOrElse(Array.empty[(String, Long)])
-      else Array.empty[(String, Long)]
-    }
-    if (hist.isEmpty) return Nil
-    val baseN = hist.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sum }
+      factor: Int = DefaultDriftFactor): Seq[String] =
+    typeDriftWarning(trailingWeek(spark, curatedBase, ingestionDate),
+      batchTypeCounts, factor)
+
+  private def typeDriftWarning(week: Week,
+      batchTypeCounts: Map[String, Long], factor: Int): Seq[String] = {
+    if (week.typeCounts.isEmpty) return Nil
+    val baseN = week.typeCounts
     val baseTotal = BigInt(baseN.values.sum)
     val total = BigInt(batchTypeCounts.values.sum)
-    batchTypeCounts.toSeq.sortBy(_._1).flatMap { case (t, n) =>
-      baseN.get(t).flatMap { bn =>
-        val high = BigInt(n) * baseTotal > factor * BigInt(bn) * total
-        val low = factor * BigInt(n) * baseTotal < BigInt(bn) * total
-        if (high || low)
-          Some(s"type-share drift: '$t' is $n of $total rows vs " +
-            s"trailing-week $bn of $baseTotal (>${factor}x share shift)")
-        else None
-      }
+    batchTypeCounts.toSeq.filter(_._1 != null).sortBy(_._1).flatMap {
+      case (t, n) =>
+        baseN.get(t).flatMap { bn =>
+          val high = BigInt(n) * baseTotal > factor * BigInt(bn) * total
+          val low = factor * BigInt(n) * baseTotal < BigInt(bn) * total
+          if (high || low)
+            Some(s"type-share drift: '$t' is $n of $total rows vs " +
+              s"trailing-week $bn of $baseTotal (>${factor}x share shift)")
+          else None
+        }
     }
   }
 
   /** Pipeline-shaped variant: compare ONE batch's row count (already in
     * hand from the DQ counter pass — no extra scan of the batch) against
-    * the trailing week of CURATED partitions. Each history point is a
-    * parquet `count(*)` over one date partition — footer metadata only,
-    * no data pages — so the whole check is O(7 partition listings)
-    * regardless of data size. Missing history days (gaps, start of
-    * history) simply don't contribute; no baseline at all ⇒ no warning. */
+    * the trailing week of CURATED partitions, read in the same single
+    * query as the drift check's history. Missing history days (gaps,
+    * start of history) simply don't contribute; no baseline at all ⇒ no
+    * warning. */
   def volumeWarning(spark: SparkSession, curatedBase: String,
       ingestionDate: String, batchRows: Long,
-      threshold: Double = DefaultThreshold): Option[String] = {
-    val date = java.time.LocalDate.parse(ingestionDate)
-    // best-effort history — see typeDriftWarning: a sibling partition
-    // mid-rewrite under a concurrent backfill reads as absent
-    val history = (1 to 7).flatMap { back =>
-      val d = date.minusDays(back.toLong).toString
-      val path = RawEvents.partitionPath(curatedBase, d)
-      if (graft.io.CuratedWriter.upstreamExists(spark, path))
-        scala.util.Try(spark.read.parquet(path).count()).toOption
-      else None
-    }
+      threshold: Double = DefaultThreshold): Option[String] =
+    volumeWarning(trailingWeek(spark, curatedBase, ingestionDate),
+      batchRows, threshold)
+
+  private def volumeWarning(week: Week, batchRows: Long,
+      threshold: Double): Option[String] = {
+    val history = week.dayRows
     if (history.isEmpty) None
     else {
       val baseline = history.sum.toDouble / history.size

@@ -1,6 +1,8 @@
 package graft.dq
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.schema.EventSchema
 
@@ -31,41 +33,84 @@ final case class DqCounters(
 
 object DqCounters {
 
-  /** Single-pass counter computation.
+  /** The five counters that are plain conditional counts, defined once
+    * for both paths that compute them: [[compute]]'s single `agg`, and
+    * the pipeline's `Observation` on its staged write. Spark rejects
+    * distinct aggregates in observed metrics, so `dup_extra_rows`
+    * ([[dupExtraRows]]) is not among them.
     *
-    * Semantics preserved exactly:
-    *  - invalid_event_type uses negated `isin`: NULL event_type yields
-    *    NULL (not true) under SQL three-valued logic, so nulls are NOT
-    *    counted as invalid — they are counted by null_event_type
-    *    (ref: raw_to_curated_events_v3_dq.py:78; SURVEY §2.4 F3);
-    *  - dup_extra_rows = Σ over event_id groups of (count-1), nulls
-    *    forming ONE group like groupBy does (ref: ..._v3_dq.py:81-83):
-    *    computed scan-free of a groupBy as
-    *    total - countDistinct(event_id) - [1 if any null event_id];
-    *  - empty input ⇒ all counters 0 (the reference coalesces the NULL
-    *    sum at :83).
-    */
+    * invalid_event_type uses negated `isin`: NULL event_type yields NULL
+    * (not true) under SQL three-valued logic, so nulls are NOT counted as
+    * invalid — they are counted by null_event_type
+    * (ref: raw_to_curated_events_v3_dq.py:78; SURVEY §2.4 F3). */
+  def plainColumns(allowed: Seq[String] = EventSchema.allowedEventTypes)
+      : Seq[Column] = Seq(
+    count(lit(1)).as("total_rows"),
+    count(when(col("event_id").isNull, 1)).as("null_event_id"),
+    count(when(col("event_type").isNull, 1)).as("null_event_type"),
+    count(when(col("user_id").isNull, 1)).as("null_user_id"),
+    count(when(!col("event_type").isin(allowed: _*), 1))
+      .as("invalid_event_type"))
+
+  /** dup_extra_rows = Σ over event_id groups of (count-1), nulls forming
+    * ONE group like groupBy does (ref: ..._v3_dq.py:81-83): computed
+    * scan-free of a groupBy as
+    * total - countDistinct(event_id) - [1 if any null event_id]. */
+  def dupExtraRows: Column =
+    (count(lit(1)) - count_distinct(col("event_id")) -
+      coalesce(max(when(col("event_id").isNull, 1).otherwise(0)), lit(0)))
+      .as("dup_extra_rows")
+
+  /** Single-pass counter computation: [[plainColumns]] and
+    * [[dupExtraRows]] in one `agg`. Empty input ⇒ all counters 0 (the
+    * reference coalesces the NULL sum at :83). */
   def compute(df: DataFrame,
       allowed: Seq[String] = EventSchema.allowedEventTypes): DqCounters = {
-    val row = df.agg(
-      count(lit(1)).as("total_rows"),
-      count(when(col("event_id").isNull, 1)).as("null_event_id"),
-      count(when(col("event_type").isNull, 1)).as("null_event_type"),
-      count(when(col("user_id").isNull, 1)).as("null_user_id"),
-      count(when(!col("event_type").isin(allowed: _*), 1))
-        .as("invalid_event_type"),
-      (count(lit(1)) - count_distinct(col("event_id")) -
-        coalesce(max(when(col("event_id").isNull, 1).otherwise(0)), lit(0)))
-        .as("dup_extra_rows")
-    ).head()
-    DqCounters(
-      totalRows = row.getLong(0),
-      nullEventId = row.getLong(1),
-      nullEventType = row.getLong(2),
-      nullUserId = row.getLong(3),
-      invalidEventType = row.getLong(4),
-      dupExtraRows = row.getLong(5))
+    val row = df.agg(dupExtraRows, plainColumns(allowed): _*).head()
+    fromMetrics(row.getValuesMap(row.schema.fieldNames.toSeq),
+      row.getLong(0))
   }
+
+  /** Counters from the [[plainColumns]] metrics by name (an agg row or
+    * an `Observation`), plus dup_extra_rows from wherever the caller
+    * counted it. */
+  def fromMetrics(metrics: Map[String, Any], dups: Long): DqCounters = {
+    def n(name: String) = metrics(name).asInstanceOf[Long]
+    DqCounters(
+      totalRows = n("total_rows"),
+      nullEventId = n("null_event_id"),
+      nullEventType = n("null_event_type"),
+      nullUserId = n("null_user_id"),
+      invalidEventType = n("invalid_event_type"),
+      dupExtraRows = dups)
+  }
+}
+
+/** Per-value row counts of a string column as ONE aggregate, so a tally
+  * (event types, quarantine reasons) can be observed (Spark
+  * `Observation`) instead of costing its own `groupBy` action. A Spark
+  * map cannot hold a null key, so null values are skipped; callers that
+  * need their count take it from a counter (e.g. `null_event_type`). */
+object Tally extends Aggregator[String, Map[String, Long], Map[String, Long]] {
+  override def zero: Map[String, Long] = Map.empty
+  override def reduce(b: Map[String, Long], v: String): Map[String, Long] =
+    if (v == null) b else b.updated(v, b.getOrElse(v, 0L) + 1L)
+  override def merge(x: Map[String, Long], y: Map[String, Long])
+      : Map[String, Long] =
+    y.foldLeft(x) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+  override def finish(b: Map[String, Long]): Map[String, Long] = b
+  override def bufferEncoder: Encoder[Map[String, Long]] =
+    ExpressionEncoder[Map[String, Long]]()
+  override def outputEncoder: Encoder[Map[String, Long]] =
+    ExpressionEncoder[Map[String, Long]]()
+
+  /** The tally of `c` as a column named `name`. */
+  def apply(c: Column, name: String): Column =
+    udaf(Tally, Encoders.STRING)(c).as(name)
+
+  /** Read a tally back from observed metrics. */
+  def of(metrics: Map[String, Any], name: String): Map[String, Long] =
+    metrics(name).asInstanceOf[scala.collection.Map[String, Long]].toMap
 }
 
 /** One DQ rule: evaluates the counters to an optional failure message.
@@ -175,17 +220,6 @@ final case class DqReport(
 }
 
 object Dq {
-  /** Evaluate the full gate over a batch: one aggregation pass, then the
-    * rule list. Non-gating `warnings` (e.g. [[Anomaly.volumeWarning]])
-    * ride along into the report. */
-  def run(df: DataFrame, ingestionDate: String, rawPath: String,
-      curatedPath: String, warnings: Seq[String] = Nil): DqReport = {
-    val counters = DqCounters.compute(df)
-    val failures = DqCheck.all.flatMap(_.evaluate(counters))
-    DqReport(ingestionDate, rawPath, curatedPath, counters, failures,
-      warnings)
-  }
-
   /** Row-level quarantine split — the production evolution of the
     * all-or-nothing gate: instead of failing the whole batch when a rule
     * trips, each offending ROW is diverted with a `quarantine_reason`
@@ -219,12 +253,15 @@ object Dq {
     splitTagged(tagQuarantine(df, allowed))
 
   /** The tagging pass [[splitQuarantine]] splits: input rows plus `_rn`
-    * (clean-copy rank) and `quarantine_reason` (null = valid). Factored
-    * out so a caller running SEVERAL actions over the split (reason
-    * tallies, both zone writes, counters) can localCheckpoint THIS frame
-    * once and pay the scan + dedup-window shuffle a single time — the
-    * split itself is two narrow filters (guide §1.2: don't recompute the
-    * same pass per consumer). */
+    * (clean-copy rank), `_pos` (row position within its event_id group,
+    * null ids forming one group) and `quarantine_reason` (null = valid).
+    * Factored out so a caller running SEVERAL actions over the split
+    * (both zone writes, counters) can localCheckpoint THIS frame once
+    * and pay the scan + dedup-window shuffle a single time — the split
+    * itself is two narrow filters (guide §1.2: don't recompute the same
+    * pass per consumer). `_pos` shares the `_rn` window, so it adds no
+    * shuffle, and [[taggedDupExtraRows]] turns it into an observable
+    * dup_extra_rows. */
   def tagQuarantine(df: DataFrame,
       allowed: Seq[String] = graft.schema.EventSchema.allowedEventTypes)
       : DataFrame = {
@@ -236,10 +273,13 @@ object Dq {
         col("event_ts"), col("user_id"), col("event_type"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
+    // one projection for both window columns, so they share one Window
+    // operator (stacked withColumns would plan two)
     df
-      .withColumn("_rn",
-        when(col("event_id").isNull, lit(1L))
-          .otherwise(sum(clean.cast("long")).over(w)))
+      .withColumns(Map(
+        "_rn" -> when(col("event_id").isNull, lit(1L))
+          .otherwise(sum(clean.cast("long")).over(w)),
+        "_pos" -> row_number().over(w)))
       .withColumn("quarantine_reason",
         when(col("event_id").isNull, "null_event_id")
           .when(col("event_type").isNull, "null_event_type")
@@ -248,9 +288,16 @@ object Dq {
           .when(col("_rn") > 1, "dup_event_id"))
   }
 
+  /** [[DqCounters.dupExtraRows]] over a [[tagQuarantine]] frame as a
+    * plain count, so it can be observed: every row past the first of
+    * its event_id group is one extra. Exact, nulls included, since the
+    * window groups null ids together as `groupBy` does. */
+  def taggedDupExtraRows: Column =
+    count(when(col("_pos") > 1, 1)).as("dup_extra_rows")
+
   /** Split a [[tagQuarantine]] frame into (valid, quarantined). */
   def splitTagged(tagged: DataFrame): (DataFrame, DataFrame) =
     (tagged.where(col("quarantine_reason").isNull)
-        .drop("_rn", "quarantine_reason"),
-      tagged.where(col("quarantine_reason").isNotNull).drop("_rn"))
+        .drop("_rn", "_pos", "quarantine_reason"),
+      tagged.where(col("quarantine_reason").isNotNull).drop("_rn", "_pos"))
 }

@@ -11,27 +11,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (ref: raw_to_curated_events_v2_idempotent.py:59-70,
   * raw_to_curated_events_v3_dq.py:155-162; rationale docs/design.md:77-96).
   *
-  * Two equivalent strategies are provided; both are partition-scoped, so
-  * at 100 TB a daily run rewrites one day's worth of files, never the
-  * table:
-  *  - [[overwritePartition]]: literal purge semantics via Hadoop
-  *    FileSystem.delete + direct-path write (works without any catalog);
+  * Both strategies are partition-scoped, so at 100 TB a daily run
+  * rewrites one day's worth of files, never the table:
+  *  - the pipeline's staged flip (`graft.pipeline.Pipeline`): write the
+  *    partition into a hidden staged dir, then [[purge]] the live dir
+  *    and rename the staged one into place (works without any catalog);
   *  - [[dynamicOverwrite]]: Spark's dynamic partitionOverwriteMode —
   *    Catalyst replaces only the partitions present in the incoming data
   *    (the idiomatic form; atomic per-partition via the commit protocol).
   */
 object CuratedWriter {
-
-  /** K2 literal port of purge+write: delete the partition dir, write the
-    * frame (WITHOUT its partition column) directly to that dir. */
-  def overwritePartition(df: DataFrame, curatedBase: String,
-      ingestionDate: String): String = {
-    val spark = df.sparkSession
-    val target = RawEvents.partitionPath(curatedBase, ingestionDate)
-    purge(spark, target)
-    df.drop("ingestion_date").write.mode("overwrite").parquet(target)
-    target
-  }
 
   /** K3-idiomatic: dynamic partition overwrite — only partitions present
     * in `df` are replaced; concurrent dates never interfere. */

@@ -2,9 +2,10 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
-import graft.dq.{Anomaly, DqReport}
+import graft.dq.{Anomaly, DqCheck, DqCounters, DqReport, Tally}
 import graft.io.{CuratedWriter, RawEvents}
 
 /** Zone layout for one pipeline deployment (SURVEY §1.1).
@@ -37,10 +38,17 @@ final class MissingUpstreamException(path: String)
 /** The reference's main entry point as a library function: steps 2–8 of
   * SURVEY §3.1 in one JVM — no job polling, no Py4J hop.
   *
-  * Order of operations is the reference's fail-safe contract
-  * (ref: raw_to_curated_events_v3_dq.py:68-162):
-  * read → DQ single-pass → report write → gate → purge+write curated.
-  * A DQ failure leaves prior curated data intact.
+  * Every entry point ([[Pipeline.runPartition]],
+  * [[Pipeline.runPartitionQuarantine]], [[Pipeline.readmitQuarantine]])
+  * follows one order: heal any interrupted flip → stage → observe →
+  * report write → audit → gate → flip. Each zone's new content is
+  * written ONCE into a hidden staged dir, and the DQ counters and
+  * tallies are observed (Spark `Observation`) on the passes that feed
+  * those writes, so the gate costs no pass of its own. A failing gate
+  * purges the staged dirs and publishes nothing: prior curated data
+  * stays intact, the reference's fail-safe contract (ref:
+  * raw_to_curated_events_v3_dq.py:68-162, docs/design.md:109-114) — the
+  * refused batch has paid its staged write, not touched a live dir.
   */
 object Pipeline {
 
@@ -53,6 +61,8 @@ object Pipeline {
     // C1 fail-fast arg validation (ref: ..._v3_dq.py:31-37)
     require(validDate(ingestionDate),
       "ingestion_date must be YYYY-MM-DD, e.g. 2025-01-02")
+    // heal any interrupted zone flip BEFORE reading or writing the date
+    recoverPending(spark, conf, ingestionDate)
 
     val rawPath = RawEvents.partitionPath(conf.rawBase, ingestionDate)
     val curatedPath = RawEvents.partitionPath(conf.curatedBase, ingestionDate)
@@ -63,42 +73,72 @@ object Pipeline {
     if (!CuratedWriter.upstreamExists(spark, rawPath))
       throw new MissingUpstreamException(rawPath)
 
-    // ONE materialized pass over the raw NDJSON: the counter agg, the
-    // type-drift agg and the curated write each re-parsed the JSON
-    // otherwise (3 full parses per run; guide §1.2). localCheckpoint
-    // also freezes processing_ts so all three consumers see one audit
-    // timestamp.
-    val df = RawEvents.curate(
-      RawEvents.readPartition(spark, conf.rawBase, ingestionDate))
-      .localCheckpoint()
-
-    // Counters run on the curated frame like the reference (the derived
-    // columns don't affect any counter; one scan total). The volume
-    // anomaly check (roadmap item docs/design.md:166-168) reuses the
-    // counter pass's row count against the trailing curated week —
-    // footer-metadata counts only — and WARNS without gating.
-    val counters = graft.dq.DqCounters.compute(df)
-    // one extra column-pruned agg of the batch for per-type counts; the
-    // drift check itself reads only event_type pages from the trailing
-    // curated week (roadmap docs/design.md:166-168, second bullet)
-    val batchTypes = df.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val warnings = Anomaly.volumeWarning(spark, conf.curatedBase,
-      ingestionDate, counters.totalRows).toSeq ++
-      Anomaly.typeDriftWarning(spark, conf.curatedBase, ingestionDate,
-        batchTypes)
-    val failures = graft.dq.DqCheck.all.flatMap(_.evaluate(counters))
+    // ONE parse of the raw NDJSON: the staged curated write observes the
+    // five plain counters and the per-type tally as it goes.
+    // current_timestamp() is fixed once per query, so processing_ts is
+    // one audit timestamp across the partition. The counters run on the
+    // curated frame like the reference (the derived columns don't affect
+    // any counter).
+    val batch = Observation()
+    val flips = stage(spark, ingestionDate, Seq(
+      RawEvents.curate(RawEvents.readPartition(spark, conf.rawBase,
+        ingestionDate)).observe(batch,
+          Tally(col("event_type"), "event_types"),
+          DqCounters.plainColumns(): _*) -> conf.curatedBase))
+    // dup_extra_rows is distinct, which Observation rejects: one
+    // aggregate over the staged partition's event_id column, run beside
+    // the anomaly checks' history read (the two reads are independent)
+    val dups = concurrently(
+      spark.read.schema("event_id STRING").parquet(flips.head._1)
+        .agg(DqCounters.dupExtraRows).head().getLong(0))
+    val m = batch.get
+    val observed = DqCounters.fromMetrics(m, 0L) // all but dup_extra_rows
+    // the null type's count is a counter; a map key cannot be null
+    val batchTypes = Tally.of(m, "event_types") ++
+      (if (observed.nullEventType > 0)
+        Map((null: String) -> observed.nullEventType) else Map.empty)
+    // volume and type-drift anomaly checks (roadmap docs/design.md:166-168)
+    // over ONE read of the trailing curated week; they WARN, never gate
+    val warnings = Anomaly.trailingWeekWarnings(spark, conf.curatedBase,
+      ingestionDate, observed.totalRows, batchTypes)
+    val counters = observed.copy(dupExtraRows = dups())
+    val failures = DqCheck.all.flatMap(_.evaluate(counters))
     val report = DqReport(ingestionDate, rawPath, curatedPath, counters,
       failures, warnings)
-    CuratedWriter.writeSingleFile(spark, metricsPath, report.toJson)
-    // audit BEFORE the gate throw — failed attempts are the audit
-    // trail's whole point (the same report-precedes-raise contract as
-    // the JSON write above)
-    auditBestEffort(spark, conf, report)
-    if (report.status == "FAIL") throw new DqFailedException(report)
-
-    CuratedWriter.overwritePartition(df, conf.curatedBase, ingestionDate)
+    reportAndGate(spark, conf, report, metricsPath, flips)
+    commit(spark, conf, ingestionDate, flips)
     report
+  }
+
+  /** Persist the report, audit it, then gate: on FAIL the staged dirs
+    * are purged and [[DqFailedException]] raised, so nothing publishes.
+    * The audit lands BEFORE the gate throw — failed attempts are the
+    * audit trail's whole point (the report-precedes-raise contract of
+    * the JSON write). */
+  private def reportAndGate(spark: SparkSession, conf: PipelineConfig,
+      report: DqReport, metricsPath: String,
+      flips: Seq[(String, String)]): Unit = {
+    CuratedWriter.writeSingleFile(spark, metricsPath, report.toJson)
+    auditBestEffort(spark, conf, report)
+    if (report.status == "FAIL") {
+      flips.foreach { case (staged, _) => CuratedWriter.purge(spark, staged) }
+      throw new DqFailedException(report)
+    }
+  }
+
+  /** Start `body` on a new thread and return its result's getter. A new
+    * thread inherits this one's Spark local properties (job group,
+    * scheduler pool), so its jobs belong to the calling run. */
+  private def concurrently[T](body: => T): () => T = {
+    val task = new java.util.concurrent.FutureTask[T](() => body)
+    val t = new Thread(task, "graft-pipeline-aux")
+    t.setDaemon(true)
+    t.start()
+    () =>
+      try task.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }
   }
 
   /** Best-effort audit append (see [[PipelineConfig]]): a broken audit
@@ -142,24 +182,40 @@ object Pipeline {
     if (!CuratedWriter.upstreamExists(spark, rawPath))
       throw new MissingUpstreamException(rawPath)
 
-    // ONE materialized tagging pass: counters, the per-reason tally and
-    // BOTH zone writes otherwise each re-parse the raw NDJSON and re-run
-    // the dedup-rank window (4 parses + 3 window shuffles per run;
-    // guide §1.2). The tagged frame carries the original rows plus
-    // (_rn, quarantine_reason), so counters over it equal counters over
-    // df row-for-row.
+    // ONE materialized tagging pass feeds both staged zone writes
+    // (otherwise each re-parses the raw NDJSON and re-runs the dedup-rank
+    // window; guide §1.2)
     val tagged = graft.dq.Dq.tagQuarantine(RawEvents.curate(
       RawEvents.readPartition(spark, conf.rawBase, ingestionDate)))
       .localCheckpoint()
-    val (valid, quarantined) = graft.dq.Dq.splitTagged(tagged)
-
-    val counters = graft.dq.DqCounters.compute(tagged)
-    val reasons = quarantined.groupBy("quarantine_reason").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    // Every counter but total_rows counts only rows the split
+    // quarantines: a valid row is clean and the first clean copy of its
+    // id, so its `_pos` is 1. So the counters and the reason tally are
+    // observed on the quarantined rows alone, before their tag columns
+    // drop (dup_extra_rows counts `_pos` > 1: no distinct aggregate),
+    // and the valid write observes only its row count.
+    val faults = Observation()
+    val clean = Observation()
+    val (valid, _) = graft.dq.Dq.splitTagged(tagged)
+    val quarantined = tagged.where(col("quarantine_reason").isNotNull)
+      .observe(faults, graft.dq.Dq.taggedDupExtraRows,
+        DqCounters.plainColumns() :+
+          Tally(col("quarantine_reason"), "reasons"): _*)
+      .drop("_rn", "_pos")
+    // both zones move in ONE transaction (staged two-phase flip): no
+    // crash leaves admitted rows in curated while quarantine still
+    // carries the pre-run set, or vice versa
+    val flips = stage(spark, ingestionDate, Seq(quarantined -> quarantineBase,
+      valid.observe(clean, count(lit(1)).as("n")) -> conf.curatedBase))
+    val m = faults.get
+    val q = DqCounters.fromMetrics(m, m("dup_extra_rows").asInstanceOf[Long])
+    val counters =
+      q.copy(totalRows = q.totalRows + clean.get("n").asInstanceOf[Long])
+    val reasons = Tally.of(m, "reasons").toSeq.sortBy(_._1)
     val nQuarantined = reasons.map(_._2).sum
     val warnings = reasons.map { case (reason, n) =>
       s"quarantined $n rows: $reason"
-    }.toSeq
+    }
     // rate gate in integers: q / total > rate  ⇔  q * scale > total * (rate*scale)
     val scale = 1000000L
     val failures =
@@ -172,15 +228,8 @@ object Pipeline {
       else Nil
     val report = DqReport(ingestionDate, rawPath, curatedPath, counters,
       failures, warnings)
-    CuratedWriter.writeSingleFile(spark, metricsPath, report.toJson)
-    auditBestEffort(spark, conf, report)
-    if (report.status == "FAIL") throw new DqFailedException(report)
-
-    // both zones move in ONE transaction (staged two-phase flip): no
-    // crash leaves admitted rows in curated while quarantine still
-    // carries the pre-run set, or vice versa
-    publishZones(spark, conf, ingestionDate,
-      Seq(quarantined -> quarantineBase, valid -> conf.curatedBase))
+    reportAndGate(spark, conf, report, metricsPath, flips)
+    commit(spark, conf, ingestionDate, flips)
     report
   }
 
@@ -202,16 +251,16 @@ object Pipeline {
     * is exactly such a key. The replay is audited as its OWN run
     * (report-precedes-write ordering, failures = none — re-admission
     * diagnoses, it never gates) and its JSON report lands beside the
-    * original as `data_quality_readmission.json`. Both zone rewrites
-    * are localCheckpoint-materialized BEFORE the purge: each output
-    * unions rows read from the very directory it overwrites.
+    * original as `data_quality_readmission.json`. Each zone's new
+    * content unions rows read from the very directory its flip
+    * replaces; both staged writes finish before either flip, so they
+    * recompute from lineage with no materialization in between.
     * Returns the replay's report. */
   def readmitQuarantine(spark: SparkSession, conf: PipelineConfig,
       ingestionDate: String, quarantineBase: String,
       reasons: Seq[String] = Nil,
       allowed: Seq[String] = graft.schema.EventSchema.allowedEventTypes)
       : DqReport = {
-    import org.apache.spark.sql.functions._
     require(validDate(ingestionDate),
       "ingestion_date must be YYYY-MM-DD, e.g. 2025-01-02")
     // heal any interrupted zone flip BEFORE reading or writing the date
@@ -228,49 +277,53 @@ object Pipeline {
     val keep = q.where(!inScope)
     // one materialized tagging pass — valid0 feeds TWO joins (admit,
     // collide) and requar the quarantine rewrite; untagged, each re-ran
-    // the dedup-rank window (guide §1.2)
-    val tagged = graft.dq.Dq.tagQuarantine(cand, allowed).localCheckpoint()
+    // the dedup-rank window (guide §1.2). The replay's counters are
+    // observed on that pass: counters over the tagged frame == counters
+    // over cand (same rows; the tag columns don't enter any counter).
+    val batch = Observation()
+    val tagged = graft.dq.Dq.tagQuarantine(cand, allowed)
+      .observe(batch, graft.dq.Dq.taggedDupExtraRows,
+        DqCounters.plainColumns(): _*)
+      .localCheckpoint()
     val (valid0, requar) = graft.dq.Dq.splitTagged(tagged)
     val curated =
       if (CuratedWriter.upstreamExists(spark, curatedPath))
         spark.read.parquet(curatedPath)
       else valid0.where(lit(false))
     val existingKeys = curated.select("event_id")
+    val admitted = Observation()
     val admit = valid0.join(existingKeys, Seq("event_id"), "left_anti")
-      .localCheckpoint()
+      .observe(admitted, count(lit(1)).as("n"))
     val collide = valid0.join(existingKeys, Seq("event_id"), "left_semi")
       .withColumn("quarantine_reason", lit("dup_event_id"))
+    val kept = Observation()
     val newQuar = keep.unionByName(requar).unionByName(collide)
-      .localCheckpoint()
-    val newCurated = curated.unionByName(admit).localCheckpoint()
+      .observe(kept, Tally(col("quarantine_reason"), "reasons"))
+    val newCurated = curated.unionByName(admit)
+    // both zones move in ONE transaction (staged two-phase flip). Within
+    // the flip, curated renames first: even a crash INSIDE the ~ms flip
+    // window leaves admitted rows present in at least one zone —
+    // duplicated at worst, which the next replay's curated-collision
+    // anti-join re-tags as dup_event_id — never lost (the old
+    // quarantine-first write order purged them before curated had them).
+    val flips = stage(spark, ingestionDate,
+      Seq(newCurated -> conf.curatedBase, newQuar -> quarantineBase))
     // the replay's own report: counters over the re-examined batch (the
     // honest diagnosis of what quarantine still holds), admitted/kept
-    // tallies as warnings, no failures — then audit, then the writes
-    // counters over the tagged frame == counters over cand (same rows;
-    // the two tag columns don't enter any counter) — reuses the
-    // checkpoint instead of re-reading the quarantine zone
-    val counters = graft.dq.DqCounters.compute(tagged)
-    val nAdmit = admit.count()
-    val kept = newQuar.groupBy("quarantine_reason").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    // tallies as warnings, no failures — then audit, then the flip
+    val m = batch.get
+    val counters =
+      DqCounters.fromMetrics(m, m("dup_extra_rows").asInstanceOf[Long])
+    val nAdmit = admitted.get("n").asInstanceOf[Long]
     val warnings = s"readmitted $nAdmit rows" +:
-      kept.map { case (r, n) => s"kept $n rows: $r" }.toSeq
+      Tally.of(kept.get, "reasons").toSeq.sortBy(_._1)
+        .map { case (r, n) => s"kept $n rows: $r" }
     val report = DqReport(ingestionDate, qPath, curatedPath, counters,
       Nil, warnings)
-    CuratedWriter.writeSingleFile(spark,
+    reportAndGate(spark, conf, report,
       RawEvents.partitionPath(conf.metricsBase, ingestionDate) +
-        "data_quality_readmission.json", report.toJson)
-    auditBestEffort(spark, conf, report)
-    // both zones move in ONE transaction (staged two-phase flip; both
-    // frames are localCheckpoint-materialized above because each reads
-    // the very directory its flip replaces). Within the flip, curated
-    // renames first: even a crash INSIDE the ~ms flip window leaves
-    // admitted rows present in at least one zone — duplicated at worst,
-    // which the next replay's curated-collision anti-join re-tags as
-    // dup_event_id — never lost (the old quarantine-first write order
-    // purged them before curated had them).
-    publishZones(spark, conf, ingestionDate,
-      Seq(newCurated -> conf.curatedBase, newQuar -> quarantineBase))
+        "data_quality_readmission.json", flips)
+    commit(spark, conf, ingestionDate, flips)
     report
   }
 
@@ -280,8 +333,10 @@ object Pipeline {
   // (curated + quarantine) whose contents must move together — written
   // as two independent Spark jobs, a crash in between left an admitted
   // partition in one zone and stale rows in the other for a full re-run
-  // window. The staged two-phase flip closes the seam to a metadata
-  // blink: every zone's new content lands in a HIDDEN staging dir
+  // window; runPartition publishes its one zone the same way, so its
+  // gate can refuse a write it has already observed. The staged
+  // two-phase flip closes the seam to a metadata blink: every zone's
+  // new content lands in a HIDDEN staging dir
   // (`<base>/.staged/ingestion_date=<d>` — dot-dirs are invisible to
   // Spark's partition discovery, so readers never see half-written
   // staging), then ONE atomically-published pending record
@@ -308,20 +363,23 @@ object Pipeline {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Stage every zone's content, publish the pending record (the
-    * atomic commit point), flip, clear the record. `zones` =
-    * (content, liveBase) pairs; contents must already be materialized
-    * (localCheckpoint) if they read from the dirs they replace. */
-  private def publishZones(spark: SparkSession, conf: PipelineConfig,
-      d: String, zones: Seq[(org.apache.spark.sql.DataFrame, String)])
-      : Unit = {
-    val flips = zones.map { case (df, base) =>
+  /** Write every zone's new content into its hidden staged dir (an
+    * orphan from an earlier attempt is purged first). `zones` =
+    * (content, liveBase) pairs. Returns the (staged, live) flips for
+    * [[commit]]. */
+  private def stage(spark: SparkSession, d: String,
+      zones: Seq[(DataFrame, String)]): Seq[(String, String)] =
+    zones.map { case (df, base) =>
       val staged = stagedPath(base, d)
       CuratedWriter.purge(spark, staged)
       df.drop("ingestion_date").write.mode("overwrite").parquet(staged)
       staged -> RawEvents.partitionPath(base, d).stripSuffix("/")
     }
-    // commit point: one atomic file naming every flip
+
+  /** Publish the pending record naming every flip (the atomic commit
+    * point), flip, clear the record. */
+  private def commit(spark: SparkSession, conf: PipelineConfig,
+      d: String, flips: Seq[(String, String)]): Unit = {
     val rec = txnPendingPath(conf, d)
     val f = hadoopFs(spark, rec)
     val tmp = new org.apache.hadoop.fs.Path(

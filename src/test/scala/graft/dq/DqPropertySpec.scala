@@ -94,6 +94,50 @@ class DqPropertySpec extends SparkSpec {
     }
   }
 
+  test("pipeline reports carry exactly the counters DqCounters.compute " +
+      "finds in the same raw partition") {
+    import graft.pipeline.{DqFailedException, Pipeline, PipelineConfig}
+    val batches = for {
+      base <- Gen.listOfN(40, cleanEvent)
+      nNullId <- Gen.choose(0, 4)
+      nNullType <- Gen.choose(0, 4)
+      nInvalid <- Gen.choose(0, 3)
+      nDupes <- Gen.choose(0, 4)
+    } yield base.take(nNullId).map(_.copy(event_id = null)) ++
+      base.slice(10, 10 + nNullType).map(_.copy(event_type = null)) ++
+      base.slice(20, 20 + nInvalid).map(_.copy(event_type = "bogus")) ++
+      base.drop(30) ++ base.drop(30).take(nDupes)
+    val traps = Seq(
+      // null event_ids form ONE group; a null type is not invalid
+      cleanEvent.pureApply(Gen.Parameters.default, Seed(7L)) +:
+        Seq.fill(3)(cleanEvent.pureApply(Gen.Parameters.default, Seed(8L))
+          .copy(event_id = null, event_type = null)),
+      Nil) // an empty batch
+    val inputs = (1 to 4).map(i => batches.pureApply(
+      Gen.Parameters.default, Seed(i.toLong))) ++ traps
+    inputs.zipWithIndex.foreach { case (rows, i) =>
+      val root = tmpDir("dq-parity")
+      val conf = PipelineConfig(s"$root/raw", s"$root/curated",
+        s"$root/metrics")
+      val date = f"2025-01-${i + 1}%02d"
+      graft.gen.EventsGen.writeNdjson(rows, conf.rawBase, date)
+      val expected = DqCounters.compute(graft.io.RawEvents.curate(
+        graft.io.RawEvents.readPartition(spark, conf.rawBase, date)))
+      def counters(run: => DqReport): DqCounters =
+        try run.counters
+        catch { case e: DqFailedException => e.report.counters }
+      assert(counters(Pipeline.runPartition(spark, conf, date)) == expected,
+        s"runPartition, batch $i")
+      assert(counters(Pipeline.runPartitionQuarantine(spark, conf, date,
+        s"$root/quarantine", maxQuarantineRate = 1.0)) == expected,
+        s"runPartitionQuarantine, batch $i")
+    }
+    // the traps hold what they claim
+    val trap = DqCounters.compute(mkDf(traps.head))
+    assert(trap.nullEventId == 3 && trap.dupExtraRows == 2 &&
+      trap.nullEventType == 3 && trap.invalidEventType == 0)
+  }
+
   test("report JSON round-trips its counters (parse with Spark JSON)") {
     forAll(Gen.nonEmptyListOf(cleanEvent)) { rows =>
       val c = DqCounters.compute(mkDf(rows))

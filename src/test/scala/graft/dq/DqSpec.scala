@@ -277,6 +277,12 @@ class DqSpec extends SparkSpec {
     // no history at all → no warnings
     assert(Anomaly.typeDriftWarning(s, tmpDir("graft-typedrift-empty"),
       "2025-01-08", Map("click" -> 10L)).isEmpty)
+    // a null type has no baseline but counts toward the batch total:
+    // 120 null rows shrink both shares below half their baseline
+    val withNulls = Anomaly.typeDriftWarning(s, base, "2025-01-08",
+      Map("click" -> 10L, "view" -> 90L, (null: String) -> 120L))
+    assert(withNulls.size == 2 && withNulls.forall(_.contains("of 220 rows")),
+      s"got $withNulls")
   }
 
   test("volumeWarning: metadata-count baseline over curated history") {

@@ -1,9 +1,5 @@
 package graft.io
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,34 +26,6 @@ class SnapshotsMorSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     df.select("id").as[String].collect().toSet
-  }
-
-  /** Spark jobs `body` starts on this thread. Its jobs carry a fresh
-    * job group; a marker job in a second group follows, and the
-    * listener bus delivers in order, so once the marker is seen every
-    * job of `body` has been counted. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"plan-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger(0)
-    val marker = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach { g =>
-            if (g == group) jobs.incrementAndGet()
-            else if (g == s"$group-marker") marker.countDown()
-          }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "planning")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
-    } finally sc.removeSparkListener(l)
   }
 
   test("a 1-key MoR delete commits O(tombstone): one added key file, " +

@@ -231,6 +231,77 @@ class PipelineSpec extends SparkSpec {
       allowed = graft.schema.EventSchema.allowedEventTypes :+ "hack")
     assert(rep3.warnings.exists(_.startsWith("readmitted 0 rows")))
     assert(quarReasons() == after)
+    // exact warnings: the kept tally names every reason left in
+    // quarantine, in reason order
+    val kept = Seq("kept 10 rows: dup_event_id",
+      "kept 1 rows: invalid_event_type", "kept 21 rows: null_user_id")
+    assert(rep.warnings == "readmitted 1 rows" +: kept)
+    assert(rep2.warnings == "readmitted 0 rows" +: kept)
+    assert(rep3.warnings == "readmitted 0 rows" +: kept)
+  }
+
+  test("null event_type rows over trailing curated history fail the " +
+      "gate with a persisted report (the drift check skips the null type)") {
+    val conf = freshConf()
+    gen(conf, "2025-01-01")
+    Pipeline.runPartition(spark, conf, "2025-01-01")
+    gen(conf, "2025-01-02")
+    val nullTypes = EventsGen.generateDay("2025-01-02", nEvents = 3, seed = 7L)
+      .map(e => e.copy(event_id = "nt-" + e.event_id, event_type = null))
+    EventsGen.writeNdjson(nullTypes, conf.rawBase, "2025-01-02",
+      fileName = "null_types.json")
+    val ex = intercept[DqFailedException] {
+      Pipeline.runPartition(spark, conf, "2025-01-02")
+    }
+    // 3 generated + 1 injected duplicate
+    assert(ex.getMessage.contains("event_type has nulls: 4"))
+    val json = scala.io.Source.fromFile(new File(
+      RawEvents.partitionPath(conf.metricsBase, "2025-01-02"),
+      "data_quality.json")).mkString
+    assert(json.contains("\"status\": \"FAIL\"") &&
+      json.contains("event_type has nulls: 4"))
+    assert(!new File(
+      RawEvents.partitionPath(conf.curatedBase, "2025-01-02")).exists())
+  }
+
+  test("runPartition starts as many Spark jobs over 7 trailing curated " +
+      "days as over 1; a failing gate stages nothing and leaves the live " +
+      "partition byte-untouched") {
+    def copyDay(conf: PipelineConfig, from: String, to: String): Unit =
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new File(RawEvents.partitionPath(conf.curatedBase, from)),
+        new File(RawEvents.partitionPath(conf.curatedBase, to)))
+    val week = freshConf()
+    gen(week, "2025-01-01")
+    Pipeline.runPartition(spark, week, "2025-01-01")
+    (2 to 7).foreach(i => copyDay(week, "2025-01-01", f"2025-01-0$i"))
+    gen(week, "2025-01-08")
+    val oneDay = freshConf()
+    gen(oneDay, "2025-01-01")
+    Pipeline.runPartition(spark, oneDay, "2025-01-01")
+    gen(oneDay, "2025-01-02")
+    val overWeek =
+      jobsStartedBy(Pipeline.runPartition(spark, week, "2025-01-08"))
+    val overDay =
+      jobsStartedBy(Pipeline.runPartition(spark, oneDay, "2025-01-02"))
+    assert(overWeek == overDay,
+      s"$overWeek jobs over 7 trailing days vs $overDay over 1")
+
+    val live = new File(RawEvents.partitionPath(week.curatedBase, "2025-01-08"))
+    def bytes(): Map[String, Seq[Byte]] = live.listFiles().map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = bytes()
+    val bad = EventsGen.generateDay("2025-01-08", nEvents = 5)
+      .map(_.copy(event_id = null))
+    EventsGen.writeNdjson(bad, week.rawBase, "2025-01-08",
+      fileName = "bad_events.json")
+    intercept[DqFailedException] {
+      Pipeline.runPartition(spark, week, "2025-01-08")
+    }
+    assert(bytes() == before, "a refused batch must not touch live files")
+    val staged = new File(s"${week.curatedBase}/.staged")
+    assert(!staged.exists() || staged.list().isEmpty,
+      s"a refused batch leaves no staged content: ${staged.list().toSeq}")
   }
 
   test("missing upstream partition fails distinctly (sensor C4)") {

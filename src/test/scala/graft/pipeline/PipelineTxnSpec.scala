@@ -153,6 +153,76 @@ class PipelineTxnSpec extends SparkSpec {
     assert(curatedIds(c) == Set("a1") && quarIds(root) == Set("bad"))
   }
 
+  private def liveBytes(dir: String): Map[String, Seq[Byte]] =
+    new File(dir).listFiles().map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("runPartition: a crash AFTER its commit point is healed by the " +
+      "next runPartition of the date, even one its gate refuses") {
+    val root = tmpDir("txn_run_postcommit")
+    val c = conf(root)
+    writeRaw(c.rawBase, Seq(evt("a1"), evt("a2")))
+    Pipeline.runPartition(spark, c, date)
+    val s = spark
+    import s.implicits._
+    // plant the interrupted NEXT publish: staged content and the pending
+    // record naming its flip; live still old
+    val staged = s"${c.curatedBase}/.staged/ingestion_date=$date"
+    Seq(("b1", "u1")).toDF("event_id", "user_id")
+      .write.mode("overwrite").parquet(staged)
+    val live = RawEvents.partitionPath(c.curatedBase, date).stripSuffix("/")
+    val rec = new File(s"${c.metricsBase}/ingestion_date=$date/_txn_pending")
+    java.nio.file.Files.write(rec.toPath, s"$staged\t$live".getBytes("UTF-8"))
+    // the next run's batch fails its gate: only the heal may publish
+    writeRaw(c.rawBase, Seq(evt("a1"), evt("x1", "bogus")))
+    intercept[DqFailedException](Pipeline.runPartition(spark, c, date))
+    assert(curatedIds(c) == Set("b1"), "the committed flip completes")
+    assert(!rec.exists() && !new File(staged).exists())
+  }
+
+  test("runPartition: a crash BEFORE its commit point leaves the live " +
+      "curated partition byte-untouched") {
+    val root = tmpDir("txn_run_precommit")
+    val c = conf(root)
+    writeRaw(c.rawBase, Seq(evt("a1"), evt("a2")))
+    Pipeline.runPartition(spark, c, date)
+    val live = RawEvents.partitionPath(c.curatedBase, date).stripSuffix("/")
+    val before = liveBytes(live)
+    val s = spark
+    import s.implicits._
+    // a run that died mid-stage: staged content, no record
+    Seq(("zz", "u1")).toDF("event_id", "user_id").write.mode("overwrite")
+      .parquet(s"${c.curatedBase}/.staged/ingestion_date=$date")
+    assert(!Pipeline.recoverPending(spark, c, date),
+      "no record ⇒ nothing to recover")
+    assert(liveBytes(live) == before)
+    // the next attempt is refused by its gate: still nothing published,
+    // and the orphan is gone
+    writeRaw(c.rawBase, Seq(evt("a1"), evt("x1", "bogus")))
+    intercept[DqFailedException](Pipeline.runPartition(spark, c, date))
+    assert(liveBytes(live) == before)
+    assert(!new File(s"${c.curatedBase}/.staged/ingestion_date=$date").exists())
+  }
+
+  test("runPartition: a stale staged dir from an earlier attempt is " +
+      "purged before the new write") {
+    val root = tmpDir("txn_run_stale")
+    val c = conf(root)
+    val s = spark
+    import s.implicits._
+    val staged = s"${c.curatedBase}/.staged/ingestion_date=$date"
+    Seq(("zz", "u1")).toDF("event_id", "user_id").write.mode("overwrite")
+      .parquet(staged)
+    val staleFiles = new File(staged).list().filter(_.startsWith("part-")).toSet
+    writeRaw(c.rawBase, Seq(evt("a1"), evt("a2")))
+    Pipeline.runPartition(spark, c, date)
+    assert(curatedIds(c) == Set("a1", "a2"))
+    val live = RawEvents.partitionPath(c.curatedBase, date).stripSuffix("/")
+    assert((new File(live).list().toSet & staleFiles).isEmpty,
+      "no file of the stale attempt reaches the live partition")
+    assert(!new File(staged).exists())
+  }
+
   test("readmitQuarantine publishes through the same transaction: a " +
       "planted torn state heals before the replay reads either zone") {
     val root = tmpDir("txn_readmit")
