@@ -8,63 +8,37 @@ therefore moves whenever the composition changes, not only when
 something regresses — this table is the mechanical decomposition that
 separates the two (verdict r8 task #8), reused by bench_diff.
 
-Classes (first match wins; membership is intentionally name-driven so
-the split is stable across rounds and needs no plan introspection):
-  parity       ref_* — the reference-pipeline parity family
-  index-build  queries that commit/serve a persisted artifact inside
-               the timed query (snapshot tables, BM25/IVF/graph stores)
-  iterative    fixed-round loops (pagerank, k-core, BFS, LPA/modularity,
-               components, tokenizer/quality trainers, recall curves
-               that build several indexes)
-  analytic     everything else — one-shot relational/window/dedup/text
+Classes (parity, analytic, index-build, iterative) are assigned by the
+engine (`graft.queries.Q.classOf`, documented there) and read from the
+artifact's "classes_by_query" map, so the taxonomy has one definition.
 
 Usage: python3 scripts/bench_classes.py <bench.json>
 """
 import json
-import re
 import sys
-
-INDEX_BUILD = re.compile(
-    r"(_persist|_append|_delete|_compact)$"
-    r"|^q_graph_(persist|append|serve_)"
-    r"|^q_(time_travel|snapshot_prune|partition_evolution)$"
-    r"|^q_snapshot_(merge|merge_evolved|schema_evolution|tag|partition_evolution|sql|sql_dml|delete_mor)$"
-    r"|^(text_unigram_serve|emb_knn_graph)$"
-    r"|^q_dq_(quarantine|audit_history|readmission)$"
-    r"|^q_raw_compaction$"
-    r"|^dedup_incremental$")
-ITERATIVE = re.compile(
-    r"pagerank|kcore|components|graph_bfs|label_propagation|modularity"
-    r"|bpe_|unigram|quality_train|recall_at_k|nprobe")
-
-
-def classify(name):
-    if name.startswith("ref_"):
-        return "parity"
-    if INDEX_BUILD.search(name):
-        return "index-build"
-    if ITERATIVE.search(name):
-        return "iterative"
-    return "analytic"
-
 
 CLASSES = ["parity", "analytic", "index-build", "iterative"]
 
 
-def decompose(queries):
+NO_CLASSES = ("no classes_by_query map in {} (written by graft.Bench "
+              "since the class taxonomy moved into the engine); "
+              "per-class section skipped")
+
+
+def decompose(queries, classes):
     """{class: (n, total_sec)} over non-error entries."""
     out = {c: [0, 0.0] for c in CLASSES}
     for name, t in queries.items():
         if t is None or t < 0:
             continue
-        c = classify(name)
+        c = classes[name]
         out[c][0] += 1
         out[c][1] += t
     return {c: (n, tot) for c, (n, tot) in out.items()}
 
 
-def table(queries):
-    rows = decompose(queries)
+def table(queries, classes):
+    rows = decompose(queries, classes)
     lines = [f"{'class':<12} {'n':>4} {'total_s':>9} {'s_per_q':>8}"]
     for c in CLASSES:
         n, tot = rows[c]
@@ -80,4 +54,6 @@ def table(queries):
 if __name__ == "__main__":
     with open(sys.argv[1]) as f:
         d = json.load(f)
-    print(table(d.get("queries", {})))
+    if "classes_by_query" not in d:
+        sys.exit(NO_CLASSES.format(sys.argv[1]))
+    print(table(d.get("queries", {}), d["classes_by_query"]))

@@ -20,12 +20,12 @@ import sys
 def load(path):
     with open(path) as f:
         d = json.load(f)
-    return d.get("queries", {}), d.get("plans", {})
+    return d.get("queries", {}), d.get("plans", {}), d.get("classes_by_query")
 
 
 def main(old_path, new_path, ratio=1.5):
-    oq, op = load(old_path)
-    nq, np_ = load(new_path)
+    oq, op, _ = load(old_path)
+    nq, np_, ncls = load(new_path)
     bad = 0
     for name in sorted(set(oq) | set(nq)):
         if name not in nq:
@@ -54,22 +54,26 @@ def main(old_path, new_path, ratio=1.5):
             print(f"FASTER  {name}: {t0:.2f}s -> {t1:.2f}s (same plan)")
     # per-class s/query over the COMMON queries: separates composition
     # drift (new heavy classes joined the inventory) from same-class
-    # regression — see bench_classes.py
-    from bench_classes import classify, CLASSES
-    common = [n for n in oq if n in nq and oq[n] >= 0 and nq[n] >= 0]
-    per = {c: [0, 0.0, 0.0] for c in CLASSES}
-    for n in common:
-        c = classify(n)
-        per[c][0] += 1
-        per[c][1] += oq[n]
-        per[c][2] += nq[n]
-    print(f"\nper-class s/query over {len(common)} common queries "
-          "(old -> new):")
-    for c in CLASSES:
-        k, t0, t1 = per[c]
-        if k:
-            print(f"  {c:<12} n={k:<4} {t0 / k:.3f} -> {t1 / k:.3f} "
-                  f"({t1 / t0:.2f}x)")
+    # regression — see bench_classes.py. Classes come from the newer
+    # artifact, which covers every common query.
+    from bench_classes import CLASSES, NO_CLASSES
+    if ncls is None:
+        print("\n" + NO_CLASSES.format(new_path))
+    else:
+        common = [n for n in oq if n in nq and oq[n] >= 0 and nq[n] >= 0]
+        per = {c: [0, 0.0, 0.0] for c in CLASSES}
+        for n in common:
+            c = ncls[n]
+            per[c][0] += 1
+            per[c][1] += oq[n]
+            per[c][2] += nq[n]
+        print(f"\nper-class s/query over {len(common)} common queries "
+              "(old -> new):")
+        for c in CLASSES:
+            k, t0, t1 = per[c]
+            if k:
+                print(f"  {c:<12} n={k:<4} {t0 / k:.3f} -> {t1 / k:.3f} "
+                      f"({t1 / t0:.2f}x)")
     print("diff done" + (f" — {bad} finding(s)" if bad else " — clean"))
     return 1 if bad else 0
 

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Q
+
 /** Benchmark main (driver contract): runs the full query inventory on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -19,16 +21,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench")
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, org.apache.spark.sql.DataFrame) = {
@@ -104,7 +97,7 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     val loadLimit = sys.env.get("SPARK_GRAFT_LOAD_LIMIT")
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(cpus.toDouble * 1.5)
+      .getOrElse(Session.cpus * 1.5)
     if (sys.env.get("SPARK_GRAFT_BENCH_ABORT_ON_LOAD").contains("1")) {
       val l0 = loadavg()
       if (l0 > loadLimit) {
@@ -136,7 +129,7 @@ object Bench {
             System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
             (-1.0, "err")
         }
-      (q.name, t, fp, load)
+      (q, t, fp, load)
     }
 
     // JSON string escaping: env-supplied paths (outFile, sfDir) and
@@ -145,18 +138,16 @@ object Bench {
     // either would emit malformed JSON exactly where it hurts most
     def jstr(s: String): String =
       s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val qs = results.map { case (k, v, _, _) => "\"" + jstr(k) + "\":" + v }
-      .mkString("{", ",", "}")
-    val plans = results
-      .map { case (k, _, fp, _) => "\"" + jstr(k) + "\":\"" + jstr(fp) + "\"" }
-      .mkString("{", ",", "}")
-    val loads = results
-      .map { case (k, _, _, l) =>
-        "\"" + jstr(k) + "\":" + math.round(l * 100) / 100.0 }
-      .mkString("{", ",", "}")
+    def byQuery(v: ((Q, Double, String, Double)) => Any): String =
+      results.map(r => "\"" + jstr(r._1.name) + "\":" + v(r))
+        .mkString("{", ",", "}")
+    val qs = byQuery { case (_, t, _, _) => t }
+    val plans = byQuery { case (_, _, fp, _) => "\"" + jstr(fp) + "\"" }
+    val classesByQuery = byQuery { case (q, _, _, _) => "\"" + q.cls + "\"" }
+    val loads = byQuery { case (_, _, _, l) => math.round(l * 100) / 100.0 }
     val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plans":$plans,"loadavg":$loads,"sf":"${jstr(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plans":$plans,"classes_by_query":$classesByQuery,"loadavg":$loads,"sf":"${jstr(sfDir)}"}"""
 
     // COMPACT summary line: the full line above is ~100 KB for the full
     // inventory and the round driver keeps only a truncated stdout TAIL
@@ -165,35 +156,16 @@ object Bench {
     // totals, worst-5, pointer to the full artifact) is printed BEFORE
     // the full line for human scanning and AGAIN as the very last line
     // so the tail always ends with one complete parseable JSON object.
-    // Class taxonomy mirrors scripts/bench_classes.py (the source of
-    // truth — keep the two in sync).
-    def classify(n: String): String = {
-      val indexBuild = ("(_persist|_append|_delete|_compact)$" +
-        "|^q_graph_(persist|append|serve_)" +
-        "|^q_(time_travel|snapshot_prune|partition_evolution)$" +
-        "|^q_snapshot_(merge|merge_evolved|schema_evolution|tag|" +
-        "partition_evolution|sql|sql_dml|delete_mor)$" +
-        "|^(text_unigram_serve|emb_knn_graph)$" +
-        "|^q_dq_(quarantine|audit_history|readmission)$" +
-        "|^q_raw_compaction$|^dedup_incremental$").r
-      val iterative = ("pagerank|kcore|components|graph_bfs" +
-        "|label_propagation|modularity|bpe_|unigram|quality_train" +
-        "|recall_at_k|nprobe").r
-      if (n.startsWith("ref_")) "parity"
-      else if (indexBuild.findFirstIn(n).isDefined) "index-build"
-      else if (iterative.findFirstIn(n).isDefined) "iterative"
-      else "analytic"
-    }
     val ok = results.filter(_._2 >= 0)
-    val classes = Seq("parity", "analytic", "index-build", "iterative")
+    val classes = Q.Classes
       .map { c =>
-        val in = ok.filter(r => classify(r._1) == c)
+        val in = ok.filter(_._1.cls == c)
         val sec = math.round(in.map(_._2).sum * 100) / 100.0
         s""""$c":{"n":${in.size},"sec":$sec}"""
       }.mkString("{", ",", "}")
     val worst5 = ok.sortBy(-_._2).take(5)
-      .map { case (k, v, _, _) =>
-        s""""${jstr(k)}":${math.round(v * 100) / 100.0}""" }
+      .map { case (q, v, _, _) =>
+        s""""${jstr(q.name)}":${math.round(v * 100) / 100.0}""" }
       .mkString("{", ",", "}")
     val sfName0 = new java.io.File(sfDir).getName match {
       case "" | "." | ".." => "default"
@@ -250,5 +222,8 @@ object Bench {
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     spark.stop()
+    // a run with failed queries is a failed run, not a fast one: the
+    // total above only sums the queries that succeeded
+    if (results.size > ok.size) sys.exit(1)
   }
 }

@@ -14,9 +14,10 @@ import graft.functions.{HeavyHitters, MinHashSig, SimHash, SortedJaccard, Sorted
   *
   * Wire up with:
   * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)           // in-process
-  *   // or: spark.sql.extensions=graft.GraftExtensions (config-driven)
+  *   // config-driven (spark-submit --conf works the same way)
+  *   graft.Session.local(app, "spark.sql.extensions" -> "graft.GraftExtensions")
+  *   // or in-process, on a session builder:
+  *   builder.withExtensions(new GraftExtensions)
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -81,14 +81,9 @@ object ScaleUp {
   private val Stride = 10000000L
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-scaleup",
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     run(spark, args)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.Snapshots.{FileEntry, StatRange}
@@ -30,14 +29,7 @@ object ManifestBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-manifest-bench")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-manifest-bench")
     import spark.implicits._
 
     val t = s"${sys.props("java.io.tmpdir")}/graft_manifest_bench/t"

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point — the reference's Glue-job-argument + backfill-driver
   * control plane as one in-JVM command (SURVEY §2.10 C1/C2, §3.3).
   *
@@ -24,15 +22,8 @@ object Main {
     val (start, end) = (args(3), if (args.length == 5) args(4) else args(3))
     val conf = PipelineConfig(rawBase, curatedBase, metricsBase)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("graft-pipeline",
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
 
     try {
       // print per date as it commits (an operator must see which earlier

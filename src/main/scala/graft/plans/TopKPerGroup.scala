@@ -24,8 +24,9 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * Why a physical operator when Spark ≥3.5 already optimizes
   * `row_number() <= k` through WindowGroupLimit (its own two-phase
   * per-group limit): shuffle VOLUME is a tie — both plans emit ≤ k rows
-  * per (group, input partition) before the exchange (TopKProfile
-  * measures byte-identical exchanges) — but WindowGroupLimit's limiter
+  * per (group, input partition) before the exchange (measured
+  * byte-identical exchanges with the since-deleted profiler,
+  * `git show bb0a5f0:src/main/scala/graft/tools/TopKProfile.scala`) — but WindowGroupLimit's limiter
   * requires SORTED input, so the plan keeps a full per-partition sort on
   * BOTH sides of the exchange (Sort → limit → exchange → Sort → window →
   * filter): O(n log n) comparisons and a sort buffer that can spill,
@@ -34,7 +35,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * comparisons (log k ≪ log n: admission is ONE compare against the
   * heap root for every row outside the current top-k), state is exactly
   * k row copies per group with no sort/spill machinery, and no rn
-  * column ever exists. Measured (TopKProfile, sf0.1, local[32]): 1.4×
+  * column ever exists. Measured (same TopKProfile, sf0.1, local[32]): 1.4×
   * end-to-end on few-huge-groups (sort cost dominant), parity on
   * many-tiny-groups (scan-bound) — the gap is the per-partition sorts,
   * and it widens with rows-per-group, exactly the regime (top-k docs

@@ -21,9 +21,48 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String]) {
+
+  /** Bench cost class; see [[Q.classOf]]. */
+  def cls: String = Q.classOf(name)
+}
 
 object Q {
+  /** Bench cost classes, in report order. The inventory mixes classes
+    * with order-of-magnitude different intrinsic costs (a ref_* parity
+    * projection vs a 5-iteration pagerank vs a query that commits an
+    * index mid-flight), so a single s/query moves whenever the mix
+    * changes; per-class totals separate the two.
+    *  - parity: ref_*, the reference-pipeline parity family;
+    *  - index-build: commits or serves a persisted artifact inside the
+    *    timed query (snapshot tables, BM25/IVF/graph stores);
+    *  - iterative: fixed-round loops (pagerank, k-core, BFS, LPA,
+    *    components, tokenizer/quality trainers, recall curves that
+    *    build several indexes);
+    *  - analytic: everything else.
+    */
+  val Classes: Seq[String] = Seq("parity", "analytic", "index-build", "iterative")
+
+  private val IndexBuild = ("(_persist|_append|_delete|_compact)$" +
+    "|^q_graph_(persist|append|serve_)" +
+    "|^q_(time_travel|snapshot_prune|partition_evolution)$" +
+    "|^q_snapshot_(merge|merge_evolved|schema_evolution|tag|" +
+    "partition_evolution|sql|sql_dml|delete_mor)$" +
+    "|^(text_unigram_serve|emb_knn_graph)$" +
+    "|^q_dq_(quarantine|audit_history|readmission)$" +
+    "|^q_raw_compaction$|^dedup_incremental$").r
+  private val Iterative = ("pagerank|kcore|components|graph_bfs" +
+    "|label_propagation|modularity|bpe_|unigram|quality_train" +
+    "|recall_at_k|nprobe").r
+
+  /** The class of a query name; first match wins, by name only, so the
+    * split is stable across rounds and needs no plan introspection. */
+  def classOf(name: String): String =
+    if (name.startsWith("ref_")) "parity"
+    else if (IndexBuild.findFirstIn(name).isDefined) "index-build"
+    else if (Iterative.findFirstIn(name).isDefined) "iterative"
+    else "analytic"
+
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracle))

@@ -1945,7 +1945,8 @@ object SimilarityQueries {
     // contribute), SAMPLED at the paper's ρ=0.5 by a deterministic
     // hash coin per directed adjacency entry, re-ranked to top-M
     // repairs the edges LSH missed. Measured on the recall harness
-    // (GraphRecallLab, sf0.1/2000 vecs): LSH-only M=8 = 0.50 recall@3,
+    // (sf0.1/2000 vecs; `git show bb0a5f0:src/main/scala/graft/tools/
+    // GraphRecallLab.scala`): LSH-only M=8 = 0.50 recall@3,
     // +full-pool NN-descent M=16 plateaus at 0.87 (disconnected LSH
     // component), M=24 + 1 full round = 0.97. Sampling at ρ=0.5 costs
     // recall at fixed degree (M=24: 0.97→0.87), and the paper's cure
@@ -2111,7 +2112,8 @@ object SimilarityQueries {
     // selects it (hash-derived-uniform, the pipe_weighted_sample
     // discipline, so the oracle replays the identical sample) — cutting
     // the candidate constant ~ρ²·N·M² for the paper's typical <2%
-    // recall cost (measured on GraphRecallLab: full-pool 0.97 recall@3
+    // recall cost (measured with the since-deleted GraphRecallLab, see
+    // the NN-descent note above: full-pool 0.97 recall@3
     // at sf0.1, see DESIGN_NOTES for the ρ sweep). localCheckpoint cuts
     // the lineage before the self-join (the iterative-plan discipline)
     // — N·M narrow rows, bounded.

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Plan-audit tool: prints the formatted physical plan of selected
   * queries and greps it for the properties that matter at 100 TB —
@@ -20,19 +18,10 @@ object ExplainAudit {
       "q1_pricing_summary", "q3_shipping_priority",
       "q5_local_supplier_volume", "ref_dq_counters",
       "dedup_minhash_lsh", "emb_knn_brute")
-    // honor the bench's core count so dumped plans match what Bench
-    // plans (partition counts aside, strategy choices can differ when
-    // defaultParallelism feeds size estimates)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the session Bench plans under, so dumped plans match Bench's
+    // (strategy choices can differ when defaultParallelism feeds size
+    // estimates)
+    val spark = Session.local("graft-explain")
 
     SparkEntry.inventory.filter(q => names(q.name)).foreach { q =>
       val df = q.run(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-line-per-query plan hygiene scan over the ENTIRE inventory:
   * flags nested-loop / cartesian joins (allowed only where a tiny
   * broadcast spine is intentional) so a regression can't hide in a
@@ -76,11 +74,7 @@ object PlanScan {
       "q_modularity_lpa" -> "1-row total-edge-count frame broadcast into the per-community terms; community stats are label equi-joins",
       "q_graph_serve_modularity" -> "same 1-row edge-total broadcast as q_modularity_lpa (shared modularityOf body), served off the committed edge store",
       "emb_ivf_nprobe_curve" -> "10-row query set vs corpus is the brute ground-truth leg (the emb_knn_brute shape); every IVF leg is a bucket equi-join")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-planscan")
     graft.SparkEntry.inventory.foreach { q =>
       try {
         val plan = q.run(spark, sfDir).queryExecution.executedPlan.toString

@@ -50,21 +50,12 @@ object SkewJoinLab {
       a.stripPrefix("--queries=").split(',').map(_.trim).toSeq
     }.getOrElse(DefaultQueries)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skewjoin-lab")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE's skew split is BY MAP RANGE (SkewTierSpec lesson #2): a
-      // single-file local tier scans as ONE map task and a one-mapper
-      // reduce partition can never split. A 100 TB table has thousands
-      // of input files/mappers; 8 MB scan partitions are that proxy.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE's skew split is BY MAP RANGE (SkewTierSpec lesson #2): a
+    // single-file local tier scans as ONE map task and a one-mapper
+    // reduce partition can never split. A 100 TB table has thousands
+    // of input files/mappers; 8 MB scan partitions are that proxy.
+    val spark = graft.Session.local("graft-skewjoin-lab",
+      "spark.sql.files.maxPartitionBytes" -> "8m")
 
     // The inventory's join family pre-shrinks its join sides (distinct /
     // per-user aggregates) before any shuffle — by design no join

@@ -1,22 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Minimal downstream-user example: a session wired with
   * `spark.sql.extensions=graft.GraftExtensions` (the config-driven path a
   * cluster would use via spark-submit --conf) answering the custom
   * functions from plain SQL. */
 object SqlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-sql-demo")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("graft-sql-demo",
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     val row = spark.sql(
       """SELECT simhash(array('a','b')) AS sh,
         |  sorted_jaccard(array('a','b','c'), array('b','c','d')) AS jac,
