@@ -77,9 +77,10 @@ import org.apache.spark.sql.functions._
   * the plan over [[manifestDF]], so the driver materializes only pins
   * (pruned file lists), per-version summaries, and the commit's own
   * fresh entries, never the full file history (ManifestScaleSpec pins
-  * this on a 100k-file manifest). The irreducible driver list is the
-  * path array a full-version pin hands to the parquet reader (Spark's
-  * own InMemoryFileIndex class of cost).
+  * this on a 100k-file manifest). The driver's share of a scan is the
+  * pin itself: a pinned scan reads a [[PinnedFileIndex]] built from
+  * each file's manifest-recorded size and mtime, so planning it lists
+  * no directory, stats no file and starts no listing job.
   */
 object Snapshots {
 
@@ -105,10 +106,23 @@ object Snapshots {
     * seq — the Iceberg-v2 sequence rule that makes re-inserting a
     * deleted key after the delete work, and makes folded rewrites
     * (whose files carry a newer seq) immune to the deletes they
-    * already applied. */
+    * already applied.
+    *
+    * `bytes` and `mtime` are the file's length and modification time,
+    * taken at commit from the `FileStatus` the commit already holds
+    * (Iceberg's `file_size_in_bytes`): a pinned scan builds its file
+    * index from them instead of statting the file. None for entries of
+    * manifests written before they were recorded; a scan stats those. */
   case class FileEntry(path: String, partition: String, rows: Long,
       stats: Map[String, StatRange], spec: Option[String] = None,
-      kind: Option[String] = None, seq: Option[Int] = None)
+      kind: Option[String] = None, seq: Option[Int] = None,
+      bytes: Option[Long] = None, mtime: Option[Long] = None)
+
+  /** One encoder for every driver-side `FileEntry` frame: deriving it
+    * through `spark.implicits` reflects over the case class on each
+    * call, and the driver-side resolution builds one frame per read. */
+  private lazy val FileEntryEncoder =
+    org.apache.spark.sql.Encoders.product[FileEntry]
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -522,7 +536,7 @@ object Snapshots {
         // in practice — deleteRowsMoR requires schema tracking — but
         // the filter keeps the invariant local)
         val carriedPaths =
-          pin(manifestDF(spark, table, prev), lit(true)).data.map(_._1)
+          pin(manifestDF(spark, table, prev), lit(true)).data.map(_.path)
         val carried = spark.read.option("mergeSchema", "true")
           .parquet(carriedPaths.map(p => s"$table/$p"): _*).schema
         evolveSchema(carried, df.schema, op)
@@ -693,7 +707,9 @@ object Snapshots {
           .where(!(col("partition").isin(removes: _*) &&
             specCompat(col("spec"),
               lit(spec.orNull).cast("string"))))
-      writeManifestDF(spark, carried.unionByName(adds.toDS().toDF()),
+      writeManifestDF(spark,
+        carried.unionByName(spark.createDataset(adds)(FileEntryEncoder)
+          .toDF()),
         table, v)
     } else writeDelta(spark, table, v, adds, removes, spec)
   }
@@ -780,17 +796,18 @@ object Snapshots {
     // withColumn shims did), and no manifest read ever pays a footer
     // schema-inference job (guide §1.2: the schema is a constant of the
     // format, not something to rediscover per read)
-    // DRIVER-SIDE fast path: small manifests (the overwhelmingly common
+    // DRIVER-SIDE backend: small manifests (the overwhelmingly common
     // case — segment bytes under [[DriverManifestMaxBytes]]) resolve
-    // with parquet-mr into a LocalRelation, so downstream collects and
-    // broadcast builds against the manifest cost ZERO Spark jobs. Big
-    // tables fall through to the plan-side composition
+    // into a LocalRelation, so downstream collects and broadcast builds
+    // against the manifest cost ZERO Spark jobs, and each segment is
+    // decoded once per JVM ([[SegmentCache]]) — the checks above run
+    // first, so a cached segment never serves a vacuumed or unpublished
+    // version. Big tables fall through to the plan-side composition
     // (bounded-driver contract, ManifestScaleSpec).
     val chain = chainOf(spark, table, v)
     driverManifest(spark, table, chain, DriverManifestMaxBytes) match {
       case Some(entries) =>
-        import spark.implicits._
-        entries.toDS().toDF()
+        spark.createDataset(entries)(FileEntryEncoder).toDF()
       case None => planManifest(spark, table, chain)
     }
   }
@@ -847,10 +864,8 @@ object Snapshots {
     * (specs, operator tooling). Internal planning paths use
     * [[manifestDF]] + targeted collects instead. */
   def readManifest(spark: SparkSession, table: String, v: Int)
-      : Seq[FileEntry] = {
-    import spark.implicits._
-    manifestDF(spark, table, v).as[FileEntry].collect().toSeq
-  }
+      : Seq[FileEntry] =
+    manifestDF(spark, table, v).as(FileEntryEncoder).collect().toSeq
 
   // ---- commits --------------------------------------------------------
 
@@ -993,30 +1008,51 @@ object Snapshots {
       } finally pool.shutdown()
     }
 
+  /** A just-written file's size and mtime, as its manifest entry
+    * records them (see [[FileEntry]]). */
+  private def sized(e: FileEntry,
+      st: Option[org.apache.hadoop.fs.FileStatus]): FileEntry =
+    e.copy(bytes = st.map(_.getLen), mtime = st.map(_.getModificationTime))
+
+  /** Look a read-back row's `input_file_name` up among the statuses of
+    * one glob of the commit's own files. Keyed by (parent dir, file
+    * name): unique within a commit dir (one task writes the same name
+    * into each partition dir, never twice into one), and equal whether
+    * the path came from a listing or from the URI-encoded file name. */
+  private def statusOfFile(files: Seq[org.apache.hadoop.fs.FileStatus])
+      : String => Option[org.apache.hadoop.fs.FileStatus] = {
+    def key(p: Path) = s"${p.getParent.getName}/${p.getName}"
+    val byKey = files.map(st => key(st.getPath) -> st).toMap
+    uri => byKey.get(key(new Path(new java.net.URI(uri))))
+  }
+
   /** Stats of every file under `dir` — from parquet footers when every
     * stat column's type is footer-safe (O(files) driver metadata, NO
     * extra pass over just-written data — the Iceberg DataFile-stats
     * shape; guide §6), falling back to one bounded read-back scan job
     * otherwise. `schema` is the WRITER's schema, so even the fallback
-    * skips footer schema inference. */
+    * skips footer schema inference. Either way the one glob of `dir`
+    * supplies each file's status (size and mtime). */
   private def fileStats(spark: SparkSession, table: String, dir: String,
       statsCols: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Seq[(String, Long, Map[String, StatRange])] = {
+      : Seq[(String, Long, Map[String, StatRange],
+          Option[org.apache.hadoop.fs.FileStatus])] = {
     val types = schema.map(s => statsCols.map(c =>
       c -> s(c).dataType).toMap)
+    val files = fs(spark, table)
+      .globStatus(new Path(s"$table/$dir/*.parquet")).toSeq
     if (types.exists(_.values.forall(footerStatsSafe))) {
       val conf = spark.sparkContext.hadoopConfiguration
-      val f = fs(spark, table)
-      val files = f.globStatus(new Path(s"$table/$dir/*.parquet")).toSeq
       return parMapFiles(files) { st =>
         val full = st.getPath.toString
         val rel = full.substring(full.indexOf(dir))
         val (rows, stats) =
           footerFileStats(conf, st.getPath, statsCols, types.get)
-        (rel, rows, stats)
+        (rel, rows, stats, Some(st))
       }
     }
+    val statusOf = statusOfFile(files)
     val df = schema.fold(spark.read)(spark.read.schema)
       .parquet(s"$table/$dir")
     val typs = statsCols.map(c => c -> df.schema(c).dataType.typeName).toMap
@@ -1032,7 +1068,7 @@ object Snapshots {
           c -> StatRange(typs(c),
             r.getAs[String](s"_lo_$c"), r.getAs[String](s"_hi_$c"))
         }.toMap
-        (rel, r.getAs[Long]("_rows"), stats)
+        (rel, r.getAs[Long]("_rows"), stats, statusOf(full))
       }
   }
 
@@ -1053,7 +1089,9 @@ object Snapshots {
         StructField("hi", StringType))))),
       StructField("spec", StringType),
       StructField("kind", StringType),
-      StructField("seq", IntegerType)))
+      StructField("seq", IntegerType),
+      StructField("bytes", LongType),
+      StructField("mtime", LongType)))
   }
 
   /** Parquet-message twin of [[ManifestSchema]] for the driver-side
@@ -1079,6 +1117,8 @@ object Snapshots {
         |  optional binary spec (STRING);
         |  optional binary kind (STRING);
         |  optional int32 seq;
+        |  optional int64 bytes;
+        |  optional int64 mtime;
         |}""".stripMargin)
 
   /** Write one manifest segment ON THE DRIVER: the entries are already
@@ -1123,6 +1163,8 @@ object Snapshots {
       e.spec.foreach(g.add("spec", _))
       e.kind.foreach(g.add("kind", _))
       e.seq.foreach(g.add("seq", _))
+      e.bytes.foreach(g.add("bytes", _))
+      e.mtime.foreach(g.add("mtime", _))
       w.write(g)
     } finally w.close()
   }
@@ -1176,12 +1218,12 @@ object Snapshots {
           key -> StatRange(typ, lo, hi)
         }.toMap
       }
-    FileEntry(str("path"), str("partition"),
-      if (has("rows")) g.getLong("rows", 0) else 0L,
+    def long(n: String): Option[Long] =
+      if (has(n)) Some(g.getLong(n, 0)) else None
+    FileEntry(str("path"), str("partition"), long("rows").getOrElse(0L),
       stats, Option(str("spec")), Option(str("kind")),
-      if (t.containsField("seq") && g.getFieldRepetitionCount("seq") > 0)
-        Some(g.getInteger("seq", 0))
-      else None)
+      if (has("seq")) Some(g.getInteger("seq", 0)) else None,
+      long("bytes"), long("mtime"))
   }
 
   /** Read every entry of one manifest segment's part files with
@@ -1206,27 +1248,87 @@ object Snapshots {
     }
   }
 
+  /** Decoded manifest segments, one per segment dir, bounded LRU by
+    * the segments' on-disk bytes. A segment dir is a published delta
+    * (`_manifests/v{N}`) or checkpoint (`v{N}` or its `_ckpt_<id>`
+    * re-checkpoint) and never changes once its version publishes — a
+    * vacuum re-checkpoint writes a NEW `_ckpt_` dir. Entries are keyed
+    * by the qualified dir and validated against the one glob a
+    * resolution makes of it anyway (each part file's name, length and
+    * mtime; part names carry a random UUID): a table dropped and
+    * re-created at the same path, or a crashed commit's manifest dir
+    * re-written by the re-driven commit, lists different files and
+    * misses. Segments above [[DriverManifestMaxBytes]] (the plan-side
+    * backend's) are never cached. */
+  private object SegmentCache {
+    private val MaxBytes: Long = 8 * DriverManifestMaxBytes
+    final case class Seg(table: String, version: Int, listing: Set[String],
+        bytes: Long, entries: Seq[FileEntry])
+    private val lru = new java.util.LinkedHashMap[String, Seg](16, 0.75f,
+      true)
+    private var held = 0L
+
+    def listing(files: Seq[org.apache.hadoop.fs.FileStatus]): Set[String] =
+      files.map(st => s"${st.getPath.getName}:${st.getLen}:" +
+        st.getModificationTime).toSet
+
+    def get(dir: String, listing: Set[String]): Option[Seq[FileEntry]] =
+      synchronized {
+        Option(lru.get(dir)).filter(_.listing == listing).map(_.entries)
+      }
+
+    def put(dir: String, seg: Seg): Unit = synchronized {
+      if (seg.bytes <= DriverManifestMaxBytes) {
+        Option(lru.put(dir, seg)).foreach(old => held -= old.bytes)
+        held += seg.bytes
+        val it = lru.values.iterator
+        while (held > MaxBytes && it.hasNext) {
+          held -= it.next().bytes
+          it.remove()
+        }
+      }
+    }
+
+    /** Drop `table`'s segments of versions below `floor`. */
+    def evictBelow(table: String, floor: Int): Unit = synchronized {
+      val it = lru.values.iterator
+      while (it.hasNext) {
+        val seg = it.next()
+        if (seg.table == table && seg.version < floor) {
+          held -= seg.bytes
+          it.remove()
+        }
+      }
+    }
+  }
+
   /** Driver-side composition of one resolved [[chainOf]]'s complete
     * entry set — the same checkpoint + delta-adds + same-era-tombstone
     * composition [[planManifest]] runs plan-side, over driver Seqs.
-    * Returns None when the combined segment bytes exceed `maxBytes`. */
+    * Returns None when the combined segment bytes exceed `maxBytes`.
+    * Each segment is globbed; only a segment [[SegmentCache]] does not
+    * hold is read with parquet-mr, so resolving v+1 after a commit
+    * reads just the commit's delta. */
   private[io] def driverManifest(spark: SparkSession, table: String,
       chain: (Int, List[(Int, DeltaMeta)]), maxBytes: Long)
       : Option[Seq[FileEntry]] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = fs(spark, table)
+    val root = f.makeQualified(new Path(table)).toString
     def segFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
       f.globStatus(new Path(s"$dir/*.parquet")) match {
         case null => Nil
         case a => a.toSeq
       }
     val (b, metas) = chain
-    val segs: Seq[(Int, Seq[org.apache.hadoop.fs.FileStatus])] =
-      (b -> segFiles(checkpointParquetDir(spark, table, b))) +:
+    val segs: Seq[(Int, String, Seq[org.apache.hadoop.fs.FileStatus])] =
+      ((b, checkpointParquetDir(spark, table, b)) +:
         metas.collect { case (w, m) if m.hasAdds =>
-          w -> segFiles(manifestDir(table, w))
+          (w, manifestDir(table, w))
+        }).map { case (w, dir) =>
+          (w, f.makeQualified(new Path(dir)).toString, segFiles(dir))
         }
-    if (segs.iterator.flatMap(_._2).map(_.getLen).sum > maxBytes)
+    if (segs.iterator.flatMap(_._3).map(_.getLen).sum > maxBytes)
       return None
     // same-era tombstones: a row dies iff ANY later tombstone names its
     // partition under a compatible spec (null/None on either side =
@@ -1241,8 +1343,14 @@ object Snapshots {
         origin < rv && rp != null && e.partition == rp &&
           (e.spec.isEmpty || rs.isEmpty || e.spec == rs)
       }
-    Some(segs.flatMap { case (origin, files) =>
-      readManifestEntriesDriver(conf, files).filter(alive(_, origin))
+    Some(segs.flatMap { case (origin, dir, files) =>
+      val listing = SegmentCache.listing(files)
+      SegmentCache.get(dir, listing).getOrElse {
+        val read = readManifestEntriesDriver(conf, files)
+        SegmentCache.put(dir, SegmentCache.Seg(root, origin, listing,
+          files.map(_.getLen).sum, read))
+        read
+      }.filter(alive(_, origin))
     })
   }
 
@@ -1309,14 +1417,15 @@ object Snapshots {
         val part = unescapePartitionValue(gpDir.stripPrefix("gp="))
         val (rows, stats) = footerFileStats(conf, st.getPath, statsCols,
           types)
-        FileEntry(rel, part, rows, stats, Some(partCol), kind = None,
-          seq = Some(v))
+        sized(FileEntry(rel, part, rows, stats, Some(partCol), kind = None,
+          seq = Some(v)), Some(st))
       }
     } else {
       // legacy read-back scan (stat types the footer domain can't
       // stringify faithfully, e.g. timestamps) — still under the
       // writer's schema, so no footer schema-inference job
       val typs = statsCols.map { case c => c -> types(c).typeName }.toMap
+      val statusOf = statusOfFile(files)
       val back = spark.read
         .schema(org.apache.spark.sql.types.StructType(
           df.schema.fields.map(_.copy(nullable = true)) :+
@@ -1337,8 +1446,9 @@ object Snapshots {
             c -> StatRange(typs(c),
               r.getAs[String](s"_lo_$c"), r.getAs[String](s"_hi_$c"))
           }.toMap
-          FileEntry(rel, r.getAs[String]("_gp"), r.getAs[Long]("_rows"),
-            stats, Some(partCol), kind = None, seq = Some(v))
+          sized(FileEntry(rel, r.getAs[String]("_gp"),
+            r.getAs[Long]("_rows"), stats, Some(partCol), kind = None,
+            seq = Some(v)), statusOf(full))
         }
     }
   }
@@ -1452,9 +1562,9 @@ object Snapshots {
     val fresh = fileStats(spark, table, dir, statsCols,
       Some(org.apache.spark.sql.types.StructType(
         df.schema.fields.map(_.copy(nullable = true))))).map {
-      case (rel, n, st) =>
-        FileEntry(rel, value, n, st, Some(partCol), kind = None,
-          seq = Some(v))
+      case (rel, n, st, status) =>
+        sized(FileEntry(rel, value, n, st, Some(partCol), kind = None,
+          seq = Some(v)), status)
     }
     // metadata-log commit: normally just the fresh entries + one
     // partition tombstone (O(commit)); every CheckpointEvery-th version
@@ -1528,12 +1638,13 @@ object Snapshots {
       // would spuriously refuse a commit that leaves it live. Only
       // DATA files count: a version whose sole entries are MoR delete
       // files has nothing to scan either
-      val survivors = manifestDF(spark, table, prev)
+      // (`isEmpty` is a limit-1 take: no job on a driver-side manifest)
+      val noSurvivor = manifestDF(spark, table, prev)
         .where(!isDelete(col("kind")) &&
           !(col("partition").isin(values: _*) &&
             specCompat(col("spec"), lit(partCol).cast("string"))))
-        .limit(1).count()
-      if (survivors == 0L) {
+        .isEmpty
+      if (noSurvivor) {
         breakReservation(spark, table, v)
         throw new IllegalArgumentException(
           "Snapshots.commitOverwritePartitions: refusing to publish an " +
@@ -1791,9 +1902,9 @@ object Snapshots {
     // [[deleteRows]]. One metadata probe when single-era (the common
     // case), one bounded semi-join otherwise.
     val eraPred = col("spec").isNull || col("spec") === lit(partCol)
-    val otherEraPaths = pin(mdf, !eraPred).data.map(_._1)
-    if (otherEraPaths.nonEmpty) {
-      val hit = scanPaths(spark, table, otherEraPaths, sch)
+    val otherEra = pin(mdf, !eraPred).data
+    if (otherEra.nonEmpty) {
+      val hit = scanFiles(spark, table, otherEra, sch)
         .join(changes.select(keyCol), Seq(keyCol), "left_semi")
         .limit(1).count()
       require(hit == 0L,
@@ -1874,29 +1985,39 @@ object Snapshots {
       Option(kb.getString(1)))
   }
 
-  /** One operation's pinned file set: the data files its prune kept,
-    * as (relPath, seq), and EVERY delete file of the version, as
-    * (relPath, keyCol) — a delete suppresses rows wherever they live.
-    * `mdf` is the resolution the pin came from. */
-  private[graft] case class Pin(mdf: DataFrame, data: Seq[(String, Int)],
-      dels: Seq[(String, String)])
+  /** One pinned file as the manifest records it: its path relative to
+    * the table root, its seq (0 for pre-MoR entries), its kind, and its
+    * recorded size and mtime (None before they were recorded). */
+  private[graft] case class PinFile(path: String, seq: Int, kind: String,
+      bytes: Option[Long], mtime: Option[Long]) {
+    /** The key column of a merge-on-read delete file. */
+    def delKey: String = kind.stripPrefix("delete:")
+  }
+
+  /** One operation's pinned file set: the data files its prune kept and
+    * EVERY delete file of the version — a delete suppresses rows
+    * wherever they live. `mdf` is the resolution the pin came from. */
+  private[graft] case class Pin(mdf: DataFrame, data: Seq[PinFile],
+      dels: Seq[PinFile])
+
+  private def pinFiles(rows: DataFrame): Seq[PinFile] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
+        col("kind"), col("bytes"), col("mtime"))
+      .as[PinFile].collect().toSeq
+  }
 
   /** The one manifest pin behind every version-pinned read, write-side
-    * probe and SQL scan: ONE targeted collect of (path, seq, kind) over
-    * the data rows `keep` selects plus all delete rows. An operation
-    * resolves [[manifestDF]] once and pins against that frame as often
-    * as it needs; only the kept entries reach the driver, never the
-    * full manifest. */
+    * probe and SQL scan: ONE targeted collect of (path, seq, kind, bytes,
+    * mtime) over the data rows `keep` selects plus all delete rows. An
+    * operation resolves [[manifestDF]] once and pins against that frame
+    * as often as it needs; only the kept entries reach the driver, never
+    * the full manifest. */
   private def pin(mdf: DataFrame, keep: Column): Pin = {
-    val spark = mdf.sparkSession
-    import spark.implicits._
-    val (del, data) = mdf.where(isDelete(col("kind")) || keep)
-      .select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-        col("kind"))
-      .as[(String, Int, String)].collect().toSeq
-      .partition(r => r._3 != null && r._3.startsWith("delete:"))
-    Pin(mdf, data.map(r => (r._1, r._2)),
-      del.map(r => (r._1, r._3.stripPrefix("delete:"))))
+    val (del, data) = pinFiles(mdf.where(isDelete(col("kind")) || keep))
+      .partition(r => r.kind != null && r.kind.startsWith("delete:"))
+    Pin(mdf, data, del)
   }
 
   /** Scan a [[Pin]] — the MoR read: its data files with every row its
@@ -1905,17 +2026,17 @@ object Snapshots {
     * broadcast and the scan never shuffles; with no delete active the
     * plain multi-file parquet scan comes back untouched). When the
     * prune kept no data file, an empty frame with the version's schema
-    * (one limit-1 path probe of the pin's own resolution supplies it
-    * for tables that predate schema tracking). */
+    * (for a table that predates schema tracking, one limit-1 probe of
+    * the pin's own resolution names a file to infer it from). */
   private[graft] def scanPin(spark: SparkSession, table: String, p: Pin,
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     if (p.data.isEmpty) {
-      import spark.implicits._
-      val one = p.mdf.where(!isDelete(col("kind"))).select("path")
-        .limit(1).as[String].collect().toSeq
-      scanPaths(spark, table, one, schema).where(lit(false))
+      val one =
+        if (schema.isDefined) Nil
+        else pinFiles(p.mdf.where(!isDelete(col("kind"))).limit(1))
+      scanFiles(spark, table, one, schema).where(lit(false))
     } else {
-      val base = scanPaths(spark, table, p.data.map(_._1), schema)
+      val base = scanFiles(spark, table, p.data, schema)
       if (p.dels.isEmpty) base
       else morJoin(spark, table, morTag(spark, base, p.data), p.dels,
         "left_anti").drop("_grel", "_gseq")
@@ -1926,25 +2047,25 @@ object Snapshots {
     * [[deleteRowsMoR]] cast the keys to) and `_delseq` as an int — so
     * planning a read never starts a footer schema-inference job. */
   private def readDeleteKeys(spark: SparkSession, table: String,
-      files: Seq[(String, String)], keyCol: String,
+      files: Seq[PinFile], keyCol: String,
       keyType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    spark.read
-      .schema(StructType(Seq(StructField(keyCol, keyType),
-        StructField("_delseq", IntegerType))))
-      .parquet(files.map(f => s"$table/${f._1}"): _*)
+    scanFiles(spark, table, files,
+      Some(StructType(Seq(StructField(keyCol, keyType),
+        StructField("_delseq", IntegerType)))))
   }
 
   /** Attach each row's data-file seq (`_gseq`): a broadcast
     * (relPath → seq) map joined on `input_file_name`. */
   private def morTag(spark: SparkSession, base: DataFrame,
-      entries: Seq[(String, Int)]): DataFrame = {
+      entries: Seq[PinFile]): DataFrame = {
     import spark.implicits._
     Seq("_grel", "_gseq", "_gdelkey", "_delseq").foreach(c =>
       require(!base.columns.contains(c),
         s"Snapshots: column name '$c' is reserved for merge-on-read " +
           "delete application"))
-    val seqDf = broadcast(entries.toDF("_grel", "_gseq"))
+    val seqDf = broadcast(entries.map(e => (e.path, e.seq))
+      .toDF("_grel", "_gseq"))
     // manifest-relative path = the LAST `data/c<version>/…` suffix of
     // the file URI (greedy `.*` backtracks to the final match), NOT
     // the first literal 'data/c' occurrence — a table rooted under a
@@ -1965,9 +2086,9 @@ object Snapshots {
     * filters suppressed rows away (the read); semi keeps ONLY them
     * (the fold's affected-partition probe). */
   private def morJoin(spark: SparkSession, table: String,
-      tagged: DataFrame, dels: Seq[(String, String)], joinType: String)
+      tagged: DataFrame, dels: Seq[PinFile], joinType: String)
       : DataFrame =
-    dels.groupBy(_._2).toSeq.sortBy(_._1)
+    dels.groupBy(_.delKey).toSeq.sortBy(_._1)
       .foldLeft(tagged) { case (acc, (keyCol, files)) =>
         val keys = readDeleteKeys(spark, table, files, keyCol,
           acc.schema(keyCol).dataType)
@@ -2012,9 +2133,9 @@ object Snapshots {
     val fresh = fileStats(spark, table, dir, Nil,
       Some(org.apache.spark.sql.types.StructType(
         delDf.schema.fields.map(_.copy(nullable = true))))).map {
-      case (rel, n, st) =>
-        FileEntry(rel, s"_del$v", n, st, Some("_del"),
-          Some(s"delete:$keyCol"), Some(v))
+      case (rel, n, st, status) =>
+        sized(FileEntry(rel, s"_del$v", n, st, Some("_del"),
+          Some(s"delete:$keyCol"), Some(v)), status)
     }
     commitManifest(spark, table, v, prev, fresh, Nil, None)
     sch.foreach(writeSchema(spark, table, v, _))
@@ -2039,19 +2160,21 @@ object Snapshots {
     import spark.implicits._
     val baseV = currentVersion(spark, table)
     val mdf = manifestDF(spark, table, baseV)
-    val dels = pin(mdf, lit(false)).dels
-    if (dels.isEmpty) return 0
     // the fold commits under `partCol` for EVERY affected file, so a
     // legacy-era file (different spec) would be rewritten under the
     // wrong spec while its era-scoped tombstone spares the original —
     // row duplication, then the delete-file drop resurrects whatever
     // the legacy files still suppressed. Refuse instead (the dual of
     // mergeRows' era guard); spec-evolved tables fold per era with
-    // [[deleteRows]] first.
-    val foreign = mdf.where(!isDelete(col("kind")) &&
-        col("spec").isNotNull && col("spec") =!= partCol)
-      .limit(1).count()
-    require(foreign == 0L,
+    // [[deleteRows]] first. The era check rides the pin that collects
+    // the delete files: its data side is exactly the other-era files
+    // (none on a single-spec table), so no second probe runs
+    val probe = pin(mdf, !isDelete(col("kind")) &&
+      col("spec").isNotNull && col("spec") =!= partCol)
+    val dels = probe.dels
+    if (dels.isEmpty) return 0
+    val noForeign = probe.data.isEmpty
+    require(noForeign,
       s"Snapshots.compactDeletes: $table@v$baseV holds files from a " +
         s"partition-spec era other than '$partCol' — fold " +
         "spec-evolved tables with deleteRows per era first")
@@ -2067,7 +2190,7 @@ object Snapshots {
     // handful of tombstoned keys probe O(candidate files), not the
     // table. Delete files exist only on schema-tracked tables
     // (deleteRowsMoR requires it), so `sch` types their keys.
-    val affected = dels.groupBy(_._2).toSeq.sortBy(_._1)
+    val affected = dels.groupBy(_.delKey).toSeq.sortBy(_._1)
       .map { case (kc, files) =>
         val delKeys = readDeleteKeys(spark, table, files, kc,
           sch.get(kc).dataType)
@@ -2077,7 +2200,7 @@ object Snapshots {
         else
           morJoin(spark, table,
             morTag(spark,
-              scanPaths(spark, table, pruned.map(_._1), sch), pruned),
+              scanFiles(spark, table, pruned, sch), pruned),
             files, "left_semi")
             .select(col(partCol).cast("string").as("_gpart"))
       }
@@ -2119,15 +2242,97 @@ object Snapshots {
 
   // ---- reads ----------------------------------------------------------
 
-  private def scanPaths(spark: SparkSession, table: String,
-      paths: Seq[String],
+  /** A pinned file set as Spark's file index: ONE partition directory
+    * of statuses the caller already holds, under an empty partition
+    * schema (a pin names files, never directories, so no column is
+    * discovered from their paths). `spark.read.parquet` over the same
+    * paths would stat every path on the driver, or above 32 paths
+    * start a parallel listing job, to learn what the manifest already
+    * records. Equal to another index over the same path set, like
+    * Spark's `InMemoryFileIndex`, so cache lookups and exchange reuse
+    * still match two scans of one file set. */
+  private final class PinnedFileIndex(
+      files: Array[org.apache.hadoop.fs.FileStatus])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.datasources.PartitionDirectory
+    override val rootPaths: Seq[Path] = files.map(_.getPath).toSeq
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(
+        org.apache.spark.sql.catalyst.InternalRow.empty, files))
+    override def inputFiles: Array[String] = files.map(
+      org.apache.spark.paths.SparkPath.fromFileStatus(_).urlEncoded)
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.iterator.map(_.getLen).sum
+    override def partitionSchema: org.apache.spark.sql.types.StructType =
+      new org.apache.spark.sql.types.StructType()
+    override def equals(o: Any): Boolean = o match {
+      case p: PinnedFileIndex => rootPaths.toSet == p.rootPaths.toSet
+      case _ => false
+    }
+    override def hashCode: Int = rootPaths.toSet.hashCode
+  }
+
+  /** `t` with every field, element and value nullable — what a file
+    * scan reports whatever the schema it was handed says. */
+  private def nullable(t: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), true)
+      case other => other
+    }
+  }
+
+  /** THE scan of pinned files: a parquet relation over a
+    * [[PinnedFileIndex]] whose statuses come from the manifest's
+    * recorded `bytes`/`mtime` — building it lists nothing and stats
+    * nothing. Entries of manifests written before sizes were recorded
+    * are statted here on the driver pool, inside the same builder. The
+    * version's recorded schema is passed EXPLICITLY: the reader
+    * null-fills columns a pre-evolution file lacks, no per-file footer
+    * merge, and time travel returns exactly that version's columns; a
+    * table that predates schema tracking infers it from the same
+    * statuses. File paths, sizes and so `input_file_name` and the
+    * split plan are the ones `spark.read.parquet` would produce. */
+  private def scanFiles(spark: SparkSession, table: String,
+      files: Seq[PinFile],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    require(paths.nonEmpty, s"Snapshots: empty file set under $table")
-    // the version's recorded schema is passed EXPLICITLY: the reader
-    // null-fills columns a pre-evolution file lacks, no per-file footer
-    // merge, and time travel returns exactly that version's columns
-    val r = schema.fold(spark.read)(spark.read.schema)
-    r.parquet(paths.map(p => s"$table/$p"): _*)
+    import org.apache.hadoop.fs.FileStatus
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    require(files.nonEmpty || schema.isDefined,
+      s"Snapshots: empty file set under $table")
+    val f = fs(spark, table)
+    def qualified(rel: String): Path =
+      f.makeQualified(new Path(s"$table/$rel"))
+    val blockSize = f.getDefaultBlockSize(qualified(""))
+    val statted: Map[String, FileStatus] =
+      parMapFiles(files.filter(e => e.bytes.isEmpty || e.mtime.isEmpty)) {
+        e => e.path -> f.getFileStatus(qualified(e.path))
+      }.toMap
+    val statuses = files.map { e =>
+      (e.bytes, e.mtime) match {
+        case (Some(n), Some(t)) =>
+          new FileStatus(n, false, 1, blockSize, t, qualified(e.path))
+        case _ => statted(e.path)
+      }
+    }.filter(_.getLen > 0) // Spark's index skips empty files too
+    val format = new ParquetFileFormat()
+    val dataSchema = schema.orElse(format.inferSchema(spark, Map.empty,
+        statuses)).getOrElse(throw new IllegalStateException(
+      s"Snapshots: cannot infer a schema for the pinned files of $table"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new PinnedFileIndex(statuses.toArray),
+      new org.apache.spark.sql.types.StructType(),
+      nullable(dataSchema)
+        .asInstanceOf[org.apache.spark.sql.types.StructType],
+      None, format, Map.empty)(spark))
   }
 
   /** Read as of a PINNED version: the file set is resolved here, once,
@@ -2551,6 +2756,8 @@ object Snapshots {
     // resolutions of below-floor versions fail cleanly, while in-flight
     // plans keep their graced manifest dirs for one more cycle
     publishFloor(spark, table, floor)
+    SegmentCache.evictBelow(f.makeQualified(new Path(table)).toString,
+      floor)
     (1 until prevFloor).foreach(v =>
       f.delete(new Path(manifestDir(table, v)), true))
     val dataRoot = new Path(table, "data")

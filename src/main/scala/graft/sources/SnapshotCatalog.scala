@@ -480,7 +480,7 @@ private[sources] class SnapshotScanBuilder(path: String, version: Int,
     val pin = Snapshots.sqlPin(spark, path, version, pushed.toSeq)
     if (pin.dels.isEmpty) {
       val pt = ParquetTable(s"graft-snap $path@v$version", spark, options,
-        pin.data.map(d => s"$path/${d._1}"), Some(tableSchema),
+        pin.data.map(d => s"$path/${d.path}"), Some(tableSchema),
         classOf[ParquetFileFormat])
       val inner = pt.newScanBuilder(options)
       inner.pruneColumns(required)

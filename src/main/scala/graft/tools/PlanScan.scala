@@ -3,8 +3,13 @@ package graft.tools
 /** One-line-per-query plan hygiene scan over the ENTIRE inventory:
   * flags nested-loop / cartesian joins (allowed only where a tiny
   * broadcast spine is intentional) so a regression can't hide in a
-  * query nobody explains by hand. */
-object PlanScan {
+  * query nobody explains by hand, and prints one `WIN1 <query>` line
+  * for each query whose plan holds a `WindowExec` with no partition
+  * spec — a global window Spark runs on ONE task whatever the data
+  * size. The WIN1 lines are flags only; nothing is expected or
+  * refused yet. */
+object PlanScan
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // Queries where a nested-loop join against a TINY broadcast side is
@@ -77,7 +82,8 @@ object PlanScan {
     val spark = graft.Session.local("graft-planscan")
     graft.SparkEntry.inventory.foreach { q =>
       try {
-        val plan = q.run(spark, sfDir).queryExecution.executedPlan.toString
+        val executed = q.run(spark, sfDir).queryExecution.executedPlan
+        val plan = executed.toString
         val bnlj = plan.linesIterator.count(_.contains("BroadcastNestedLoopJoin"))
         val cart = plan.linesIterator.count(_.contains("CartesianProduct"))
         if (bnlj + cart > 0) {
@@ -86,6 +92,11 @@ object PlanScan {
           else
             println(s"FLAG ${q.name}: bnlj=$bnlj cartesian=$cart")
         }
+        val win1 = collectWithSubqueries(executed) {
+          case w: org.apache.spark.sql.execution.window.WindowExec
+              if w.partitionSpec.isEmpty => w
+        }
+        if (win1.nonEmpty) println(s"WIN1 ${q.name}: ${win1.size}")
       } catch {
         case e: Throwable => println(s"ERR ${q.name}: ${e.getMessage.take(80)}")
       }

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -21,18 +20,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * job group; a marker job in a second group follows, and the
     * listener bus delivers in order, so once the marker is seen every
     * job of `body` has been counted. */
-  def jobsStartedBy(body: => Unit): Int = {
+  def jobsStartedBy(body: => Unit): Int = jobPropertiesOf(body).size
+
+  /** The local properties of each job [[jobsStartedBy]] counts, in
+    * start order. A job Spark starts outside any SQL execution (a
+    * parallel file listing, a schema-inference footer read) carries no
+    * `spark.sql.execution.id`. */
+  def jobPropertiesOf(body: => Unit): Seq[java.util.Properties] = {
     val sc = spark.sparkContext
     val group = s"counted-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      java.util.Properties]()
     val marker = new CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach { g =>
-            if (g == group) jobs.incrementAndGet()
+        Option(js.properties).foreach { p =>
+          Option(p.getProperty("spark.jobGroup.id")).foreach { g =>
+            if (g == group) jobs.add(p)
             else if (g == s"$group-marker") marker.countDown()
           }
+        }
     }
     sc.addSparkListener(l)
     try {
@@ -41,7 +48,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(s"$group-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
+      jobs.toArray(Array.empty[java.util.Properties]).toSeq
     } finally sc.removeSparkListener(l)
   }
 

@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
@@ -74,5 +76,112 @@ class ManifestBackendParitySpec extends SparkSpec {
       "v10 re-checkpointed")
     (10 to 11).foreach(v =>
       assert(driverSide(t, v) == planSide(t, v), s"v$v after vacuum"))
+  }
+  /** Every published version (and `extra` ones) resolved on the driver
+    * twice — the second from a warm segment cache — equals the
+    * plan-side composition. */
+  private def assertParity(t: String, extra: Int*): Unit =
+    ((1 to Snapshots.currentVersion(spark, t)) ++ extra).foreach { v =>
+      val plan = planSide(t, v)
+      assert(driverSide(t, v) == plan, s"v$v")
+      assert(driverSide(t, v) == plan, s"v$v, warm cache")
+    }
+
+  test("warm-cache driver resolutions equal the plan-side composition " +
+      "at every version: through checkpoints, a vacuum re-checkpoint, " +
+      "and a crashed commit driven again after breakReservation") {
+    val t = tmpDir("manifest_cache_parity")
+    val stats = Seq("cents")
+    Snapshots.commitFull(frame("d1", "x", 1 to 2)
+      .unionByName(frame("d2", "x", 1 to 2)), t, "day", stats)
+    (2 to 4).foreach { i =>
+      Snapshots.commitAppend(frame(s"a$i", "x", 1 to 2), t, "day", stats)
+      assertParity(t)
+    }
+    // a crashed commit: its slot reserved and its delta written, then
+    // the writer died before the pointer publish. A resolution of the
+    // unpublished dir warms the cache with the content the re-driven
+    // commit is about to replace
+    val crashed = Snapshots.currentVersion(spark, t) + 1
+    Snapshots.reserve(spark, t, crashed)
+    Snapshots.writeDelta(spark, t, crashed,
+      Seq(FileEntry(s"data/c$crashed/day=ghost/f.parquet", "ghost", 1L,
+        Map.empty, Some("day"), seq = Some(crashed))), Nil, Some("day"))
+    assert(driverSide(t, crashed).exists(_.partition == "ghost"))
+    assert(Snapshots.breakReservation(spark, t, crashed))
+    assert(Snapshots.commitOverwritePartition(frame("d1", "x", 7 to 8), t,
+      "day", "d1", stats) == crashed)
+    assert(!driverSide(t, crashed).exists(_.partition == "ghost"))
+    assertParity(t)
+    // past the next checkpoint, then vacuum re-checkpoints the delta floor
+    (6 to 11).foreach(i =>
+      Snapshots.commitAppend(frame(s"b$i", "x", 1 to 1), t, "day", stats))
+    assertParity(t)
+    assert(Snapshots.readDeltaMeta(spark, t, 10).isDefined, "v10 delta")
+    Snapshots.vacuum(spark, t, 10)
+    assert(Snapshots.readDeltaMeta(spark, t, 10).isEmpty,
+      "v10 re-checkpointed")
+    (10 to 11).foreach { v =>
+      val plan = planSide(t, v)
+      assert(driverSide(t, v) == plan && driverSide(t, v) == plan, s"v$v")
+    }
+    assert(Snapshots.readManifest(spark, t, 11).map(_.path).sorted ==
+      planSide(t, 11).map(_.path))
+  }
+
+  test("a vacuumed version is refused with the retention error after " +
+      "its segments were cached") {
+    val t = tmpDir("manifest_cache_vacuum")
+    Snapshots.commitFull(frame("d1", "x", 1 to 2), t, "day")
+    (2 to 4).foreach(i =>
+      Snapshots.commitAppend(frame(s"d$i", "x", 1 to 2), t, "day"))
+    val counts = (1 to 4).map(v => Snapshots.readAsOf(spark, t, v).count())
+    Snapshots.vacuum(spark, t, 3)
+    // the second vacuum deletes the graced dirs below the first floor
+    Snapshots.vacuum(spark, t, 3)
+    Seq(1, 2).foreach { v =>
+      val e = intercept[IllegalArgumentException] {
+        Snapshots.readAsOf(spark, t, v)
+      }
+      assert(e.getMessage.contains("vacuumed"), s"v$v: ${e.getMessage}")
+    }
+    assert((3 to 4).map(v => Snapshots.readAsOf(spark, t, v).count()) ==
+      counts.drop(2))
+  }
+
+  test("a manifest written without bytes/mtime (the format before they " +
+      "were recorded) reads back the same rows, beside sized entries") {
+    import org.apache.hadoop.fs.Path
+    val t = tmpDir("manifest_unsized")
+    Snapshots.commitFull(frame("d1", "x", 1 to 3)
+      .unionByName(frame("d2", "x", 1 to 3)), t, "day")
+    Snapshots.commitAppend(frame("d3", "x", 1 to 3), t, "day")
+    def rowSet(v: Int): Set[String] =
+      Snapshots.readAsOf(spark, t, v).collect().map(_.toString).toSet
+    val before = (1 to 2).map(rowSet)
+    // rewrite both segments without the two columns
+    val f = new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (1 to 2).foreach { v =>
+      val dir = new Path(t, s"_manifests/v$v")
+      val old = f.globStatus(new Path(dir, "*.parquet")).map(_.getPath)
+      val tmp = new Path(t, s"_unsized_v$v")
+      val legacy = spark.read.parquet(old.map(_.toString): _*)
+        .drop("bytes", "mtime")
+      spark.createDataFrame(legacy.collect().toSeq.asJava, legacy.schema)
+        .coalesce(1).write.parquet(tmp.toString)
+      assert(!spark.read.parquet(tmp.toString).columns.contains("bytes"))
+      old.foreach(f.delete(_, false))
+      f.globStatus(new Path(tmp, "*.parquet")).foreach(st =>
+        assert(f.rename(st.getPath, new Path(dir, st.getPath.getName))))
+    }
+    assert((1 to 2).forall(v =>
+      Snapshots.readManifest(spark, t, v).forall(_.bytes.isEmpty)))
+    assert((1 to 2).map(rowSet) == before)
+    Snapshots.commitAppend(frame("d4", "x", 1 to 3), t, "day")
+    val mixed = Snapshots.readManifest(spark, t, 3)
+    assert(mixed.exists(_.bytes.isEmpty) && mixed.exists(_.bytes.isDefined))
+    assert(rowSet(3) == before(1) ++
+      frame("d4", "x", 1 to 3).collect().map(_.toString))
+    assert(driverSide(t, 3) == planSide(t, 3))
   }
 }

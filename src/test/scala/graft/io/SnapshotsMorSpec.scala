@@ -282,10 +282,16 @@ class SnapshotsMorSpec extends SparkSpec {
   test("planning a pinned read starts no Spark job, with or without an " +
       "active delete file (delete keys are read under their known " +
       "schema, never footer-inferred)") {
+    val s = spark
+    import s.implicits._
     val t = tmpDir("mor_plan_jobs")
-    Snapshots.commitFull(
-      rows("d1", 1 to 3, 0).unionByName(rows("d2", 1 to 3, 100)), t, "day",
+    // 40 partitions, one file each: above Spark's 32-path threshold for
+    // a parallel listing job, which no read, merge probe or fold may start
+    val days = (1 to 40).map(d => s"d$d")
+    Snapshots.commitFull(days.zipWithIndex.map { case (d, i) =>
+        rows(d, 1 to 3, 100L * i) }.reduce(_.unionByName(_)), t, "day",
       statsCols = Seq("cents"))
+    assert(Snapshots.readManifest(spark, t, 1).size > 32)
     def planJobs(): Map[String, Int] = Map(
       "readPartition" -> jobsStartedBy(
         Snapshots.readPartition(spark, t, "day", "d1")),
@@ -295,15 +301,30 @@ class SnapshotsMorSpec extends SparkSpec {
         Snapshots.readRange(spark, t, "cents", "0", "50")),
       "readAsOf" -> jobsStartedBy(Snapshots.readAsOf(spark, t,
         Snapshots.currentVersion(spark, t))))
+    // a listing (or footer-inference) job runs outside any SQL execution
+    def listingJobs(body: => Unit): Int =
+      jobPropertiesOf(body)
+        .count(_.getProperty("spark.sql.execution.id") == null)
+    // one update per partition: the merge probes and rewrites all 40
+    def touchAll(round: Int): Unit =
+      Snapshots.mergeRows(spark, t, "day", "id",
+        days.map(d => (s"$d-1", d, 1000L * round, "U"))
+          .toDF("id", "day", "cents", "op"))
     assert(planJobs().values.forall(_ == 0),
       s"plain table: ${planJobs()}")
+    assert(listingJobs(touchAll(1)) == 0, "mergeRows, no delete file")
     Snapshots.deleteRowsMoR(spark, t, "id", keyDf("d1-2"))
     val withDeletes = planJobs()
     assert(withDeletes.values.forall(_ == 0),
       s"active delete file: $withDeletes")
-    // the typed delete-key read still answers
+    assert(listingJobs(touchAll(2)) == 0, "mergeRows, active delete file")
+    assert(listingJobs(Snapshots.compactDeletes(spark, t, "day")) == 0,
+      "compactDeletes")
+    // the typed delete-key read still answered, and the fold kept it
     assert(ids(Snapshots.readPartition(spark, t, "day", "d1")) ==
       Set("d1-1", "d1-3"))
+    assert(Snapshots.read(spark, t).where(col("id").endsWith("-1"))
+      .select("cents").as[Long].collect().toSet == Set(2000L))
   }
 
   test("the empty-version guard counts DATA files only: a fold or a " +

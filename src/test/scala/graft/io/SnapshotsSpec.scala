@@ -776,4 +776,51 @@ class SnapshotsSpec extends SparkSpec {
     assert(cur.count() == 2, "era-1 rows survive; e2 tombstoned")
     assert(cur.where(col("day") === "d1").count() == 2)
   }
+  test("a pinned scan plans what spark.read.parquet over the same files " +
+      "would — schema, rows, input_file_name, splits and size — from " +
+      "sizes the manifest recorded at commit") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val t = tmpDir("snap_index")
+    // `cents` is non-nullable in the recorded schema
+    Snapshots.commitFull((1 to 3000).map(i => (s"k$i", s"d${i % 3}",
+      i.toLong)).toDF("id", "day", "cents"), t, "day")
+    Snapshots.deleteRowsMoR(spark, t, "id", Seq("k7").toDF("id"))
+    val entries = Snapshots.readManifest(spark, t, 2)
+    entries.foreach { e =>
+      val file = new java.io.File(s"$t/${e.path}")
+      assert(e.bytes.contains(file.length) &&
+        e.mtime.contains(file.lastModified), e.path)
+    }
+    val data = entries.filter(_.kind.isEmpty)
+    val sch = Snapshots.schemaOf(spark, t, 1).get
+    assert(!sch("cents").nullable)
+    def splits(df: DataFrame): Seq[Seq[(String, Long, Long)]] =
+      df.queryExecution.executedPlan.collectFirst {
+        case x: FileSourceScanExec => x.inputRDD.partitions.toSeq.map(
+          _.asInstanceOf[FilePartition].files.toSeq
+            .map(f => (f.filePath.toString, f.start, f.length)))
+      }.get
+    def tagged(df: DataFrame): Set[(String, String, String, Long)] =
+      df.select(input_file_name(), col("id"), col("day"), col("cents"))
+        .as[(String, String, String, Long)].collect().toSet
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    try {
+      val mine = Snapshots.readAsOf(spark, t, 1)
+      val ref = spark.read.schema(sch)
+        .parquet(data.map(e => s"$t/${e.path}"): _*)
+      assert(mine.schema == ref.schema)
+      assert(splits(mine) == splits(ref))
+      assert(splits(mine).size > data.size, "files split at 4k")
+      assert(mine.queryExecution.optimizedPlan.stats.sizeInBytes ==
+        ref.queryExecution.optimizedPlan.stats.sizeInBytes)
+      assert(tagged(mine) == tagged(ref))
+      assert(mine.inputFiles.toSet == ref.inputFiles.toSet)
+      // the MoR read tags rows by input_file_name: the deleted key is gone
+      assert(Snapshots.readAsOf(spark, t, 2).collect().toSet ==
+        ref.where(col("id") =!= "k7").collect().toSet)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
 }
