@@ -2,9 +2,13 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot-versioned table on plain parquet — the table-format half of
   * the reference's "Consider Iceberg/Delta for transactional upserts and
@@ -35,16 +39,17 @@ import org.apache.spark.sql.functions._
   * plan-side above that — either way every consumer (pruning, diffs,
   * history, streams) sees one (path, partition, rows, stats) relation.
   *
-  * Every version-pinned read, write-side probe and SQL scan takes ONE
-  * path to its files: the operation resolves [[manifestDF]] once,
-  * [[pin]]s against that frame — one targeted collect of the data
-  * files its prune keeps plus every merge-on-read delete file — and
-  * [[scanPin]] scans the pin with the deletes applied. The public
-  * reads ([[readAsOf]], [[readPartition]], [[readWhere]], [[readIn]],
-  * [[readChanges]]) differ only in their prune predicate and residual
-  * filter; [[mergeRows]], [[deleteRows]], [[commitCompact]] and
-  * [[compactDeletes]] pin their base version's frame as often as they
-  * probe it, without resolving it again.
+  * Every scan of table data reads a [[PinnedFileIndex]], and a read
+  * decides its files in ONE place: [[readAsOf]] resolves
+  * [[manifestDF]] once and the index prunes that frame by whatever
+  * filters the scan carries ([[pruneFilter]]) when Spark plans it —
+  * [[readPartition]], [[readRange]], [[readIn]], `readAsOf(v).where(…)`
+  * and the SQL catalog's scan are all filters over that one relation.
+  * Write-side probes ([[mergeRows]], [[deleteRows]], [[commitCompact]],
+  * [[compactDeletes]]) and [[readChanges]] [[pin]] their base
+  * version's frame as often as they probe it — one targeted collect of
+  * the data files a prune keeps plus every merge-on-read delete file —
+  * and [[scanPin]] scans the pin with the deletes applied.
   *
   * The contract that makes readers safe during rewrites:
   *
@@ -425,15 +430,15 @@ object Snapshots {
   // resolution unions the eras while whole-partition tombstones stay
   // scoped to their own era (colliding partition VALUES across specs
   // cannot cross-delete — see [[manifestDF]]). Reads prune either era
-  // through the same per-file stats ([[readWhere]]), so the new layout
+  // through the same per-file stats ([[pruneFilter]]), so the new layout
   // benefits new data immediately and old data is never rewritten.
   //
   // COMPOSITE specs (date → (date, type)) are a derived column: commit
   // with partCol = a `concat(date, '/', type)` column — the composite
   // string IS the spec ("date_type"), its values partition exactly,
   // tombstones scope to it, and per-component pruning rides statsCols
-  // on the underlying columns (the [[readWhere]] path), which is how
-  // component predicates prune files in ANY era.
+  // on the underlying columns (a conjunction of filters over [[read]]),
+  // which is how component predicates prune files in ANY era.
 
   private def partSpecPath(table: String, v: Int) =
     new Path(manifestDir(table, v), "_partspec")
@@ -476,14 +481,14 @@ object Snapshots {
     * written before schema tracking (those read as before — schema
     * from the scanned files themselves). */
   def schemaOf(spark: SparkSession, table: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      : Option[StructType] = {
     val f = fs(spark, table)
     val p = schemaPath(table, v)
     try {
       if (!f.exists(p)) None
       else Some(org.apache.spark.sql.types.DataType
         .fromJson(readSmallFile(f, p))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .asInstanceOf[StructType])
     } catch {
       // a graced manifest dir can be reclaimed between the exists
       // probe and the open (vacuum churn); fall back to the legacy
@@ -498,10 +503,8 @@ object Snapshots {
     * old files' reads). All fields go nullable: an evolved read must
     * null-fill added columns in old files and dropped-from-the-frame
     * columns in new ones. */
-  private def evolveSchema(
-      prev: org.apache.spark.sql.types.StructType,
-      next: org.apache.spark.sql.types.StructType, op: String)
-      : org.apache.spark.sql.types.StructType = {
+  private def evolveSchema(prev: StructType, next: StructType,
+      op: String): StructType = {
     val prevByName = prev.fields.map(f => f.name.toLowerCase -> f).toMap
     next.fields.foreach { f =>
       prevByName.get(f.name.toLowerCase).foreach { p =>
@@ -526,8 +529,7 @@ object Snapshots {
     * The mergeSchema footer pass is paid exactly once per pre-tracking
     * table (every later commit finds a recorded `_schema`). */
   private def commitSchema(spark: SparkSession, table: String, prev: Int,
-      df: DataFrame, op: String)
-      : org.apache.spark.sql.types.StructType =
+      df: DataFrame, op: String): StructType =
     schemaOf(spark, table, prev) match {
       case Some(s) => evolveSchema(s, df.schema, op)
       case None =>
@@ -535,10 +537,8 @@ object Snapshots {
         // schema must never leak into the table schema (unreachable
         // in practice — deleteRowsMoR requires schema tracking — but
         // the filter keeps the invariant local)
-        val carriedPaths =
-          pin(manifestDF(spark, table, prev), lit(true)).data.map(_.path)
-        val carried = spark.read.option("mergeSchema", "true")
-          .parquet(carriedPaths.map(p => s"$table/$p"): _*).schema
+        val carried = inferSchema(spark, table,
+          pin(manifestDF(spark, table, prev), lit(true)).data, merge = true)
         evolveSchema(carried, df.schema, op)
     }
 
@@ -546,8 +546,7 @@ object Snapshots {
     * violation must refuse the commit with nothing on disk and the
     * version slot released, not strand a half-written version. */
   private def validatedSchema(spark: SparkSession, table: String,
-      prev: Int, df: DataFrame, op: String, v: Int)
-      : org.apache.spark.sql.types.StructType =
+      prev: Int, df: DataFrame, op: String, v: Int): StructType =
     try commitSchema(spark, table, prev, df, op)
     catch {
       case e: Throwable => breakReservation(spark, table, v); throw e
@@ -1026,6 +1025,13 @@ object Snapshots {
     uri => byKey.get(key(new Path(new java.net.URI(uri))))
   }
 
+  /** A commit's own file, from its glob status, as a pin entry. */
+  private def pinOf(dir: String)(st: FileStatus): PinFile = {
+    val full = st.getPath.toString
+    PinFile(full.substring(full.indexOf(dir)), 0, null, Some(st.getLen),
+      Some(st.getModificationTime))
+  }
+
   /** Stats of every file under `dir` — from parquet footers when every
     * stat column's type is footer-safe (O(files) driver metadata, NO
     * extra pass over just-written data — the Iceberg DataFile-stats
@@ -1053,8 +1059,7 @@ object Snapshots {
       }
     }
     val statusOf = statusOfFile(files)
-    val df = schema.fold(spark.read)(spark.read.schema)
-      .parquet(s"$table/$dir")
+    val df = scanFiles(spark, table, files.map(pinOf(dir)), schema)
     val typs = statsCols.map(c => c -> df.schema(c).dataType.typeName).toMap
     val aggs = count(lit(1L)).as("_rows") +:
       statsCols.flatMap(c => Seq(
@@ -1426,27 +1431,24 @@ object Snapshots {
       // writer's schema, so no footer schema-inference job
       val typs = statsCols.map { case c => c -> types(c).typeName }.toMap
       val statusOf = statusOfFile(files)
-      val back = spark.read
-        .schema(org.apache.spark.sql.types.StructType(
-          df.schema.fields.map(_.copy(nullable = true)) :+
-            org.apache.spark.sql.types.StructField("gp",
-              org.apache.spark.sql.types.StringType)))
-        .parquet(s"$table/$dir")
+      val back = scanFiles(spark, table, files.map(pinOf(dir)),
+        Some(df.schema))
       val aggs = count(lit(1L)).as("_rows") +:
-        (max(col("gp").cast("string")).as("_gp") +:
-          statsCols.flatMap(c => Seq(
-            min(col(c)).cast("string").as(s"_lo_$c"),
-            max(col(c)).cast("string").as(s"_hi_$c"))))
+        statsCols.flatMap(c => Seq(
+          min(col(c)).cast("string").as(s"_lo_$c"),
+          max(col(c)).cast("string").as(s"_hi_$c")))
       back.groupBy(input_file_name().as("_path"))
         .agg(aggs.head, aggs.tail: _*)
         .collect().toSeq.map { r =>
           val full = r.getString(0)
           val rel = full.substring(full.indexOf(dir))
+          val part = unescapePartitionValue(new Path(new java.net.URI(full))
+            .getParent.getName.stripPrefix("gp="))
           val stats = statsCols.map { c =>
             c -> StatRange(typs(c),
               r.getAs[String](s"_lo_$c"), r.getAs[String](s"_hi_$c"))
           }.toMap
-          sized(FileEntry(rel, r.getAs[String]("_gp"),
+          sized(FileEntry(rel, part,
             r.getAs[Long]("_rows"), stats, Some(partCol), kind = None,
             seq = Some(v)), statusOf(full))
         }
@@ -1814,8 +1816,8 @@ object Snapshots {
             .join(keys.select(keyCol), Seq(keyCol), "left_anti")
           // statsCols must survive the rewrite: a compaction that
           // dropped the manifest min/max of the store's range column
-          // would silently turn every later stats-pruned read
-          // (readRange / readWhere) into a full-file scan of the
+          // would silently turn every later stats-pruned read (any
+          // filter over a pinned read) into a full-file scan of the
           // rewritten partitions — pruneColOpt fails open, so answers
           // stay right while the targeted-read contract rots
           expect = commitOverwritePartitions(kept, table, eraCol,
@@ -1992,6 +1994,7 @@ object Snapshots {
       bytes: Option[Long], mtime: Option[Long]) {
     /** The key column of a merge-on-read delete file. */
     def delKey: String = kind.stripPrefix("delete:")
+    def isDelete: Boolean = kind != null && kind.startsWith("delete:")
   }
 
   /** One operation's pinned file set: the data files its prune kept and
@@ -2016,7 +2019,7 @@ object Snapshots {
     * the full manifest. */
   private def pin(mdf: DataFrame, keep: Column): Pin = {
     val (del, data) = pinFiles(mdf.where(isDelete(col("kind")) || keep))
-      .partition(r => r.kind != null && r.kind.startsWith("delete:"))
+      .partition(_.isDelete)
     Pin(mdf, data, del)
   }
 
@@ -2029,75 +2032,61 @@ object Snapshots {
     * (for a table that predates schema tracking, one limit-1 probe of
     * the pin's own resolution names a file to infer it from). */
   private[graft] def scanPin(spark: SparkSession, table: String, p: Pin,
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+      schema: Option[StructType]): DataFrame =
     if (p.data.isEmpty) {
       val one =
         if (schema.isDefined) Nil
         else pinFiles(p.mdf.where(!isDelete(col("kind"))).limit(1))
       scanFiles(spark, table, one, schema).where(lit(false))
     } else {
+      import spark.implicits._
       val base = scanFiles(spark, table, p.data, schema)
       if (p.dels.isEmpty) base
-      else morJoin(spark, table, morTag(spark, base, p.data), p.dels,
+      else morJoin(spark, table, base,
+        p.data.map(e => (e.path, e.seq)).toDF("_grel", "_gseq"), p.dels,
         "left_anti").drop("_grel", "_gseq")
     }
 
-  /** One key column's delete files, read under their KNOWN schema — the
-    * key as `keyType` (the version schema's type, which
-    * [[deleteRowsMoR]] cast the keys to) and `_delseq` as an int — so
-    * planning a read never starts a footer schema-inference job. */
-  private def readDeleteKeys(spark: SparkSession, table: String,
-      files: Seq[PinFile], keyCol: String,
-      keyType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    scanFiles(spark, table, files,
-      Some(StructType(Seq(StructField(keyCol, keyType),
-        StructField("_delseq", IntegerType)))))
-  }
-
-  /** Attach each row's data-file seq (`_gseq`): a broadcast
-    * (relPath → seq) map joined on `input_file_name`. */
-  private def morTag(spark: SparkSession, base: DataFrame,
-      entries: Seq[PinFile]): DataFrame = {
-    import spark.implicits._
+  /** Apply `dels` to `base` by each row's data-file seq (`_gseq`, from
+    * the `seqs` map `_grel` → `_gseq`, joined on `_metadata.file_path` —
+    * an attribute, so a filter above the read still reaches the scan's
+    * file index): one broadcast join per delete key column, guarded by
+    * `deleteSeq > dataSeq`. `anti` drops suppressed rows (the read);
+    * semi keeps ONLY them (the fold's probe). An unmapped row reads as
+    * seq 0, which every delete already exceeds for a file older than
+    * all of them, so the map carries only files since the oldest delete.
+    * Delete keys are read under their KNOWN schema (the key as the
+    * version's type, `_delseq` int): no footer inference when planning. */
+  private def morJoin(spark: SparkSession, table: String, base: DataFrame,
+      seqs: DataFrame, dels: Seq[PinFile], joinType: String): DataFrame = {
     Seq("_grel", "_gseq", "_gdelkey", "_delseq").foreach(c =>
       require(!base.columns.contains(c),
         s"Snapshots: column name '$c' is reserved for merge-on-read " +
           "delete application"))
-    val seqDf = broadcast(entries.map(e => (e.path, e.seq))
-      .toDF("_grel", "_gseq"))
     // manifest-relative path = the LAST `data/c<version>/…` suffix of
-    // the file URI (greedy `.*` backtracks to the final match), NOT
-    // the first literal 'data/c' occurrence — a table rooted under a
-    // path like /data/corpus/t would otherwise mis-anchor every row,
-    // miss the seq join, and over-apply deletes to re-inserted keys.
-    // Partition VALUES can't fake a match: Spark percent-escapes '/'
-    // in partition directory names, so the only literal `data/c<d>/`
-    // segments are version dirs (and possibly the root — hence LAST).
-    base
+    // the file URI (greedy `.*`): a root like /data/corpus/t would
+    // mis-anchor a first-match, miss the seq join and over-apply
+    // deletes to re-inserted keys. Partition values can't fake a match
+    // (Spark escapes '/' in them); only the root can — hence LAST.
+    val tagged = base
       .withColumn("_grel",
-        regexp_extract(input_file_name(),
-          "^.*/(data/c\\d+/.*)$", 1))
-      .join(seqDf, Seq("_grel"), "left_outer")
-  }
-
-  /** One broadcast join per delete key column with the seq guard
-    * `deleteSeq > dataSeq` as the extra hash-join condition. `anti`
-    * filters suppressed rows away (the read); semi keeps ONLY them
-    * (the fold's affected-partition probe). */
-  private def morJoin(spark: SparkSession, table: String,
-      tagged: DataFrame, dels: Seq[PinFile], joinType: String)
-      : DataFrame =
+        regexp_extract(base.metadataColumn("_metadata")
+          .getField("file_path"), "^.*/(data/c\\d+/.*)$", 1))
+      .join(broadcast(seqs.where(col("_gseq") >= dels.map(_.seq).min)),
+        Seq("_grel"), "left_outer")
     dels.groupBy(_.delKey).toSeq.sortBy(_._1)
       .foldLeft(tagged) { case (acc, (keyCol, files)) =>
-        val keys = readDeleteKeys(spark, table, files, keyCol,
-          acc.schema(keyCol).dataType)
+        import org.apache.spark.sql.types._
+        val keys = scanFiles(spark, table, files, Some(StructType(Seq(
+            StructField(keyCol, acc.schema(keyCol).dataType),
+            StructField("_delseq", IntegerType)))))
           .withColumnRenamed(keyCol, "_gdelkey")
         acc.join(broadcast(keys),
           acc(keyCol) === keys("_gdelkey") &&
             keys("_delseq") > coalesce(acc("_gseq"), lit(0)),
           joinType)
       }
+  }
 
   /** Merge-on-read row delete: commit version `v` adds ONE key-set
     * parquet (the distinct `keys`, stamped with `_delseq = v`) and
@@ -2130,7 +2119,10 @@ object Snapshots {
     val dir = s"data/c$v/_del"
     val delDf = distinctKeys.withColumn("_delseq", lit(v))
     delDf.coalesce(1).write.mode("overwrite").parquet(s"$table/$dir")
-    val fresh = fileStats(spark, table, dir, Nil,
+    // the key's footer min/max bounds [[compactDeletes]]' probe
+    val keyStats = Seq(keyCol).filter(c =>
+      footerStatsSafe(delDf.schema(c).dataType))
+    val fresh = fileStats(spark, table, dir, keyStats,
       Some(org.apache.spark.sql.types.StructType(
         delDf.schema.fields.map(_.copy(nullable = true))))).map {
       case (rel, n, st, status) =>
@@ -2188,19 +2180,25 @@ object Snapshots {
     // rows only one key column suppressed. Each group's probe is
     // key-range pruned against the manifest stats (fails open), so a
     // handful of tombstoned keys probe O(candidate files), not the
-    // table. Delete files exist only on schema-tracked tables
-    // (deleteRowsMoR requires it), so `sch` types their keys.
+    // table: a file survives when its stats overlap ANY delete file's
+    // recorded key range (no aggregate over the keys; a delete file
+    // without one keeps every file).
+    val delStats = mdf.where(isDelete(col("kind")))
+      .select(col("path"), col("stats")).as[(String, Map[String, StatRange])]
+      .collect().toMap
     val affected = dels.groupBy(_.delKey).toSeq.sortBy(_._1)
       .map { case (kc, files) =>
-        val delKeys = readDeleteKeys(spark, table, files, kc,
-          sch.get(kc).dataType)
-        val pruned = pin(mdf, keyRangePrune(delKeys, kc)).data
+        val keep = files.map { d =>
+          val r = delStats(d.path).get(kc)
+          pruneColOpt(kc, r.flatMap(x => Option(x.lo)),
+            r.flatMap(x => Option(x.hi)))
+        }.reduce(_ || _)
+        val pruned = pin(mdf, keep).data
         if (pruned.isEmpty)
           spark.emptyDataset[String].toDF("_gpart")
         else
-          morJoin(spark, table,
-            morTag(spark,
-              scanFiles(spark, table, pruned, sch), pruned),
+          morJoin(spark, table, scanFiles(spark, table, pruned, sch),
+            pruned.map(e => (e.path, e.seq)).toDF("_grel", "_gseq"),
             files, "left_semi")
             .select(col(partCol).cast("string").as("_gpart"))
       }
@@ -2242,36 +2240,57 @@ object Snapshots {
 
   // ---- reads ----------------------------------------------------------
 
-  /** A pinned file set as Spark's file index: ONE partition directory
-    * of statuses the caller already holds, under an empty partition
-    * schema (a pin names files, never directories, so no column is
-    * discovered from their paths). `spark.read.parquet` over the same
-    * paths would stat every path on the driver, or above 32 paths
-    * start a parallel listing job, to learn what the manifest already
-    * records. Equal to another index over the same path set, like
-    * Spark's `InMemoryFileIndex`, so cache lookups and exchange reuse
-    * still match two scans of one file set. */
-  private final class PinnedFileIndex(
-      files: Array[org.apache.hadoop.fs.FileStatus])
-      extends org.apache.spark.sql.execution.datasources.FileIndex {
+  /** A pinned file set as Spark's file index, and the ONE place a read
+    * decides its files: Spark hands every file scan's filters to
+    * `listFiles`, and `select` gets those `translateFilter` can express.
+    * A version's index pins its manifest frame AND their [[pruneFilter]]
+    * predicate there; a write-side probe's ignores them. Listings are
+    * memoized per filter set (a plan can hold a scan twice; AQE
+    * re-plans). `inputFiles` and `sizeInBytes` describe the UNFILTERED
+    * set; a plan-side manifest is never listed whole (default size,
+    * equality by `id`: table and version, or a fixed pin's paths). One
+    * partition directory of statuses from the recorded sizes. */
+  private[graft] final class PinnedFileIndex(spark: SparkSession,
+      table: String, private val id: Any, planSide: Boolean,
+      select: Seq[org.apache.spark.sql.sources.Filter] => Seq[PinFile])
+      extends org.apache.spark.sql.execution.datasources
+        .PartitioningAwareFileIndex(spark, Map.empty, None) {
     import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.execution.datasources.PartitionDirectory
-    override val rootPaths: Seq[Path] = files.map(_.getPath).toSeq
+    import org.apache.spark.sql.execution.datasources.{PartitionDirectory, PartitionSpec}
+    import org.apache.spark.sql.sources.Filter
+    private val listed = scala.collection.mutable.HashMap
+      .empty[Set[Filter], (Seq[PinFile], Seq[FileStatus])]
+    private def listing(filters: Seq[Filter]) = synchronized {
+      listed.getOrElseUpdate(filters.toSet, {
+        val files = select(filters)
+        (files, statusesOf(spark, table, files))
+      })
+    }
+    /** The pinned data files that could hold a row passing `filters`. */
+    def files(filters: Seq[Filter]): Seq[PinFile] = listing(filters)._1
     override def listFiles(partitionFilters: Seq[Expression],
         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
       Seq(PartitionDirectory(
-        org.apache.spark.sql.catalyst.InternalRow.empty, files))
-    override def inputFiles: Array[String] = files.map(
-      org.apache.spark.paths.SparkPath.fromFileStatus(_).urlEncoded)
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        listing(dataFilters.flatMap(
+          org.apache.spark.sql.GraftSqlBridge.translateFilter))._2.toArray))
+    override def allFiles(): Seq[FileStatus] = listing(Nil)._2
+    override def sizeInBytes: Long =
+      if (planSide) spark.sessionState.conf.defaultSizeInBytes
+      else super.sizeInBytes
+    override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
+    override protected def leafFiles =
+      scala.collection.mutable.LinkedHashMap.empty[Path, FileStatus]
+    override protected def leafDirToChildrenFiles
+        : Map[Path, Array[FileStatus]] = Map.empty
+    override val rootPaths: Seq[Path] =
+      Seq(fs(spark, table).makeQualified(new Path(table)))
     override def refresh(): Unit = ()
-    override def sizeInBytes: Long = files.iterator.map(_.getLen).sum
-    override def partitionSchema: org.apache.spark.sql.types.StructType =
-      new org.apache.spark.sql.types.StructType()
     override def equals(o: Any): Boolean = o match {
-      case p: PinnedFileIndex => rootPaths.toSet == p.rootPaths.toSet
+      case p: PinnedFileIndex => id == p.id
       case _ => false
     }
-    override def hashCode: Int = rootPaths.toSet.hashCode
+    override def hashCode: Int = id.hashCode
   }
 
   /** `t` with every field, element and value nullable — what a file
@@ -2289,25 +2308,11 @@ object Snapshots {
     }
   }
 
-  /** THE scan of pinned files: a parquet relation over a
-    * [[PinnedFileIndex]] whose statuses come from the manifest's
-    * recorded `bytes`/`mtime` — building it lists nothing and stats
-    * nothing. Entries of manifests written before sizes were recorded
-    * are statted here on the driver pool, inside the same builder. The
-    * version's recorded schema is passed EXPLICITLY: the reader
-    * null-fills columns a pre-evolution file lacks, no per-file footer
-    * merge, and time travel returns exactly that version's columns; a
-    * table that predates schema tracking infers it from the same
-    * statuses. File paths, sizes and so `input_file_name` and the
-    * split plan are the ones `spark.read.parquet` would produce. */
-  private def scanFiles(spark: SparkSession, table: String,
-      files: Seq[PinFile],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    import org.apache.hadoop.fs.FileStatus
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    require(files.nonEmpty || schema.isDefined,
-      s"Snapshots: empty file set under $table")
+  /** Qualified statuses from the manifest's recorded `bytes`/`mtime`
+    * (entries written before they were recorded are statted on the
+    * driver pool): the paths and sizes `spark.read.parquet` would use. */
+  private def statusesOf(spark: SparkSession, table: String,
+      files: Seq[PinFile]): Seq[FileStatus] = {
     val f = fs(spark, table)
     def qualified(rel: String): Path =
       f.makeQualified(new Path(s"$table/$rel"))
@@ -2316,33 +2321,93 @@ object Snapshots {
       parMapFiles(files.filter(e => e.bytes.isEmpty || e.mtime.isEmpty)) {
         e => e.path -> f.getFileStatus(qualified(e.path))
       }.toMap
-    val statuses = files.map { e =>
+    files.map { e =>
       (e.bytes, e.mtime) match {
         case (Some(n), Some(t)) =>
           new FileStatus(n, false, 1, blockSize, t, qualified(e.path))
         case _ => statted(e.path)
       }
     }.filter(_.getLen > 0) // Spark's index skips empty files too
-    val format = new ParquetFileFormat()
-    val dataSchema = schema.orElse(format.inferSchema(spark, Map.empty,
-        statuses)).getOrElse(throw new IllegalStateException(
-      s"Snapshots: cannot infer a schema for the pinned files of $table"))
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      new PinnedFileIndex(statuses.toArray),
-      new org.apache.spark.sql.types.StructType(),
-      nullable(dataSchema)
-        .asInstanceOf[org.apache.spark.sql.types.StructType],
-      None, format, Map.empty)(spark))
   }
 
-  /** Read as of a PINNED version: the file set is resolved here, once,
+  /** The footer schema of pinned files, for a table that predates
+    * schema tracking (Spark's inference rules). */
+  private def inferSchema(spark: SparkSession, table: String,
+      files: Seq[PinFile], merge: Boolean): StructType =
+    new ParquetFileFormat().inferSchema(spark,
+        Map("mergeSchema" -> merge.toString), statusesOf(spark, table, files))
+      .getOrElse(throw new IllegalStateException(
+        s"Snapshots: cannot infer a schema for the pinned files of $table"))
+
+  /** THE scan of table data: parquet over a [[PinnedFileIndex]] under
+    * the version's recorded schema, made nullable — the reader
+    * null-fills columns an older file lacks, and time travel returns
+    * exactly that version's columns. */
+  private def scanIndex(spark: SparkSession, index: PinnedFileIndex,
+      schema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      nullable(schema).asInstanceOf[StructType], None,
+      new ParquetFileFormat(), Map.empty)(spark))
+
+  /** [[scanIndex]] over a fixed file list: a probe's pin, delete keys, a
+    * commit's own files. No schema: inferred from the same files. */
+  private def scanFiles(spark: SparkSession, table: String,
+      files: Seq[PinFile], schema: Option[StructType]): DataFrame = {
+    require(files.nonEmpty || schema.isDefined,
+      s"Snapshots: empty file set under $table")
+    scanIndex(spark, new PinnedFileIndex(spark, table,
+        (table, files.map(_.path).toSet), planSide = false, _ => files),
+      schema.getOrElse(inferSchema(spark, table, files, merge = false)))
+  }
+
+  /** Version `v` pinned as one relation: an index pruning its manifest
+    * frame by each scan's filters, its scan schema, and every delete
+    * file (collected now: the delete anti-join is part of the plan). */
+  private[graft] case class Pinned(mdf: DataFrame, index: PinnedFileIndex,
+      schema: StructType, dels: Seq[PinFile])
+
+  private[graft] def pinned(spark: SparkSession, table: String, v: Int)
+      : Pinned = {
+    val mdf = manifestDF(spark, table, v)
+    val data = !isDelete(col("kind"))
+    // driver-side: take every entry now; only a pruning scan collects
+    val all = mdf.queryExecution.logical match {
+      case _: LocalRelation => Some(pinFiles(mdf))
+      case _ => None
+    }
+    val index = new PinnedFileIndex(spark, table,
+      (fs(spark, table).makeQualified(new Path(table)).toString, v),
+      all.isEmpty, filters =>
+        (filters.flatMap(pruneFilter).reduceOption(_ && _), all) match {
+          case (None, Some(files)) => files.filterNot(_.isDelete)
+          case (keep, _) =>
+            pinFiles(mdf.where(data && keep.getOrElse(lit(true))))
+        })
+    // pre-tracking table: the first data file by path, as Spark infers
+    val schema = schemaOf(spark, table, v).getOrElse(inferSchema(spark,
+      table, pinFiles(mdf.where(data).orderBy("path").limit(1)),
+      merge = false))
+    Pinned(mdf, index, nullable(schema).asInstanceOf[StructType],
+      all.fold(pinFiles(mdf.where(isDelete(col("kind")))))(
+        _.filter(_.isDelete)))
+  }
+
+  /** Read as of a PINNED version: the manifest is resolved here, once,
     * so the returned frame keeps answering with version `v`'s rows no
-    * matter how many commits land afterwards. Merge-on-read delete
-    * files of `v` are applied ([[scanPin]]); versions without deletes
+    * matter how many commits land afterwards. Filters above the frame
+    * reach its file index, which prunes the manifest by them when the
+    * scan is planned. Merge-on-read delete files of `v` are applied by
+    * the seq-guarded anti-join ([[morJoin]]); versions without deletes
     * read as the plain multi-file scan. */
-  def readAsOf(spark: SparkSession, table: String, v: Int): DataFrame =
-    scanPin(spark, table, pin(manifestDF(spark, table, v), lit(true)),
-      schemaOf(spark, table, v))
+  def readAsOf(spark: SparkSession, table: String, v: Int): DataFrame = {
+    val p = pinned(spark, table, v)
+    val base = scanIndex(spark, p.index, p.schema)
+    if (p.dels.isEmpty) base
+    else morJoin(spark, table, base,
+      p.mdf.where(!isDelete(col("kind"))).select(col("path").as("_grel"),
+        coalesce(col("seq"), lit(0)).as("_gseq")),
+      p.dels, "left_anti").drop("_grel", "_gseq")
+  }
 
   /** Read the latest snapshot — pinned at CALL time (the manifest is
     * resolved now), so a concurrent commit cannot make this frame see
@@ -2474,11 +2539,9 @@ object Snapshots {
     * sharpness in pathological ranges, never a row). Strings / dates /
     * timestamps compare lexicographically (ISO order = value order).
     * Files with no stats for the column, or all-null stats, are kept.
-    * Shared by the library reads ([[readWhere]], both bounds) and the
-    * SQL catalog's pushed filters (one-sided `>=`/`<=` comparisons push
-    * one bound each; their conjunction equals the two-sided overlap,
-    * which is what keeps the SQL scan's file set identical to
-    * [[readRange]]'s — SnapshotCatalogSpec pins it). */
+    * Filtered reads reach it through [[pruneFilter]], one bound per
+    * `>=`/`<=` (their conjunction is the two-sided overlap, so
+    * [[readRange]] and SQL `BETWEEN` keep the same files). */
   private[graft] def pruneColOpt(c: String, lo: Option[String],
       hi: Option[String]): Column = {
     val st = col("stats").getItem(c)
@@ -2514,22 +2577,21 @@ object Snapshots {
     case _ => None
   }
 
-  /** Manifest-pruning predicate for one pushed source Filter — None
-    * when the shape or value type cannot prune (the file is kept;
-    * Spark's residual filter preserves correctness either way).
-    * Equality on the version's PARTITION column additionally prunes by
-    * the manifest's exact partition value for same-era files (the
-    * [[readPartition]] rule), which is what makes `WHERE day = 'x'`
-    * directory-exact through SQL even when `day` carries no stats. */
-  private def pruneFilter(f: org.apache.spark.sql.sources.Filter,
-      partCol: Option[String]): Option[Column] = {
+  /** THE filter→manifest translation, for each filter a scan hands a
+    * [[PinnedFileIndex]] — None when it cannot prune (the file is kept;
+    * the residual filter keeps answers exact). Equality on a column
+    * some files were PARTITIONED by (`spec`) prunes those by their
+    * exact partition value, other files by stats: `WHERE day = 'x'` is
+    * directory-exact even when `day` has no stats ([[readPartition]]). */
+  private def pruneFilter(f: org.apache.spark.sql.sources.Filter)
+      : Option[Column] = {
     import org.apache.spark.sql.sources._
     def eq(c: String, v: Any): Option[Column] = statLit(v).map { s =>
-      val statsOv = pruneColOpt(c, Some(s), Some(s))
-      if (partCol.contains(c)) {
-        val sameEra = col("spec").isNotNull && col("spec") === lit(c)
-        (sameEra && col("partition") === lit(s)) || (!sameEra && statsOv)
-      } else statsOv
+      // 3VL care: a legacy file's spec is NULL — it must land in the
+      // stats branch, never be dropped by a null-valued comparison
+      val sameEra = col("spec").isNotNull && col("spec") === lit(c)
+      (sameEra && col("partition") === lit(s)) ||
+        (!sameEra && pruneColOpt(c, Some(s), Some(s)))
     }
     f match {
       case EqualTo(c, v) => eq(c, v)
@@ -2547,29 +2609,14 @@ object Snapshots {
       case LessThanOrEqual(c, v) =>
         statLit(v).map(s => pruneColOpt(c, None, Some(s)))
       case And(l, r) =>
-        (pruneFilter(l, partCol), pruneFilter(r, partCol)) match {
+        (pruneFilter(l), pruneFilter(r)) match {
           case (Some(a), Some(b)) => Some(a && b)
           case (a, b) => a.orElse(b) // one side still prunes
         }
       case Or(l, r) => // both sides must prune, else keep everything
-        for (a <- pruneFilter(l, partCol); b <- pruneFilter(r, partCol))
-          yield a || b
+        for (a <- pruneFilter(l); b <- pruneFilter(r)) yield a || b
       case _ => None
     }
-  }
-
-  /** The SQL catalog's scan pin: version `v`'s data files that could
-    * satisfy every pushed filter, decided from manifest stats +
-    * era-aware partition values — no parquet footer opened — plus the
-    * version's delete files. Conservative by construction: an
-    * untranslatable filter keeps all files; correctness rides on
-    * Spark's residual Filter, pruning only cuts IO. */
-  private[graft] def sqlPin(spark: SparkSession, table: String, v: Int,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Pin = {
-    val partCol = partSpecOf(spark, table, v)
-    pin(manifestDF(spark, table, v),
-      filters.flatMap(pruneFilter(_, partCol)).reduceOption(_ && _)
-        .getOrElse(lit(true)))
   }
 
   /** Files of version `v` that COULD hold rows with `c` in [lo, hi] —
@@ -2583,83 +2630,40 @@ object Snapshots {
       .as[FileEntry].collect().toSeq
   }
 
-  /** Range read with planning-time file skipping: scans only the files
-    * whose manifest stats overlap [lo, hi], then re-applies the exact
-    * predicate (stats prune at file granularity; the residual filter
-    * still runs, pushed into the parquet reader as usual). */
-  def readRange(spark: SparkSession, table: String, c: String,
-      lo: String, hi: String): DataFrame =
-    readWhere(spark, table, Map(c -> (lo, hi)))
+  // The reads below are plain filters over [[read]], whose file index
+  // prunes the manifest by them; they stay as the exact residual.
 
-  /** Era-aware partition read under SPEC EVOLUTION: scan exactly the
-    * files that can hold rows with `partCol == value` in the CURRENT
-    * version. Files committed under the same spec prune by their
-    * manifest partition value (exact — only the named partition's
-    * files); files of OTHER eras prune by per-file stats on `partCol`
-    * when the era recorded them, and are conservatively scanned
-    * otherwise (their rows pass through the residual filter — a
-    * pre-evolution file that never carried the column null-fills it
-    * and contributes nothing). This is the migration economics of spec
-    * evolution: the new layout's reads are directory-exact
-    * immediately, legacy data serves unrewritten. */
+  /** Rows with `c` in [lo, hi], values cast to the column's type. */
+  def readRange(spark: SparkSession, table: String, c: String,
+      lo: String, hi: String): DataFrame = {
+    val df = read(spark, table)
+    val t = df.schema(c).dataType
+    df.where(col(c) >= lit(lo).cast(t) && col(c) <= lit(hi).cast(t))
+  }
+
+  /** Rows whose `partCol` renders as `value`: directory-exact for files
+    * partitioned by `partCol`, stats-pruned for other eras (legacy data
+    * serves unrewritten — the economics of spec evolution). The typed
+    * equality is what the index can translate for a non-string column;
+    * the string equality keeps the rows exact. */
   def readPartition(spark: SparkSession, table: String, partCol: String,
       value: String): DataFrame = {
-    val v = currentVersion(spark, table)
-    val sch = schemaOf(spark, table, v)
-    require(sch.forall(_.fieldNames.contains(partCol)),
-      s"Snapshots.readPartition: column '$partCol' not in v$v's schema")
-    // 3VL care: a legacy file's spec is NULL — it must land in the
-    // other-era (conservative) branch, never be dropped by a
-    // null-valued comparison
-    val sameEra = col("spec").isNotNull && col("spec") === lit(partCol)
-    val otherEra = col("spec").isNull || col("spec") =!= lit(partCol)
-    val keep = (sameEra && col("partition") === lit(value)) ||
-      (otherEra && pruneColOpt(partCol, Some(value), Some(value)))
-    scanPin(spark, table, pin(manifestDF(spark, table, v), keep), sch)
-      .where(col(partCol).cast("string") === value)
+    val df = read(spark, table)
+    df.where(col(partCol).cast("string") === value &&
+      col(partCol) === lit(value).try_cast(df.schema(partCol).dataType))
   }
 
-  /** Conjunctive multi-column pruned read: a file survives only if its
-    * stats overlap EVERY range — with independent clustering per
-    * column (e.g. range-sorted on one, partition-aligned on another)
-    * the surviving set is the intersection, each column knocking out
-    * files the others can't. */
-  def readWhere(spark: SparkSession, table: String,
-      ranges: Map[String, (String, String)]): DataFrame = {
-    require(ranges.nonEmpty, "Snapshots.readWhere: no ranges given")
-    val v = currentVersion(spark, table)
-    val keep = ranges.map { case (c, (lo, hi)) =>
-      pruneColOpt(c, Some(lo), Some(hi))
-    }.reduce(_ && _)
-    val kept = scanPin(spark, table, pin(manifestDF(spark, table, v), keep),
-      schemaOf(spark, table, v))
-    kept.where(ranges.map { case (c, (lo, hi)) =>
-      val t = kept.schema(c).dataType
-      col(c) >= lit(lo).cast(t) && col(c) <= lit(hi).cast(t)
-    }.reduce(_ && _))
-  }
-
-  /** Disjunctive pruned read — ONE manifest resolution serving a whole
-    * IN-set of values: a file survives when its stats overlap ANY of
-    * the values, and the exact IN residual re-filters rows.
-    * Row-for-row identical to unioning one [[readRange]] per value
-    * (each leg's residual keeps only its own value, so the legs
-    * partition the rows this single read returns) — but a
-    * |values|-cell probe pays one manifest job + one scan instead of
-    * |values| of each. This is the batched-probe discipline the kNN
-    * graph serve documents, lifted into the store API: the per-cell
-    * loop it replaces measured ~8 manifest-resolution jobs (≈0.15 s
+  /** Rows with `c` in a set of values — ONE manifest resolution and one
+    * scan for the whole set (a file survives when its stats overlap
+    * ANY value), row-for-row the union of one [[readRange]] per value:
+    * the per-cell loop it replaced cost ~8 manifest resolutions (≈0.15 s
     * driver gap each) per IVF serve at sf0.1. */
   def readIn(spark: SparkSession, table: String, c: String,
       values: Seq[String]): DataFrame = {
     require(values.nonEmpty, "Snapshots.readIn: no values given")
-    val v = currentVersion(spark, table)
-    val keep = values.map(x => pruneColOpt(c, Some(x), Some(x)))
-      .reduce(_ || _)
-    val kept = scanPin(spark, table, pin(manifestDF(spark, table, v), keep),
-      schemaOf(spark, table, v))
-    val t = kept.schema(c).dataType
-    kept.where(values.map(x => col(c) === lit(x).cast(t)).reduce(_ || _))
+    val df = read(spark, table)
+    val t = df.schema(c).dataType
+    df.where(values.map(x => col(c) === lit(x).cast(t)).reduce(_ || _))
   }
 
   /** Register the CURRENT snapshot as a temp view so `spark.sql` works

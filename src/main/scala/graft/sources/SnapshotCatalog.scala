@@ -11,8 +11,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDelete, Suppo
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, In, Or, TableScan}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -49,26 +48,25 @@ import graft.io.Snapshots
   * through the Hadoop `FileSystem` of the root (never `java.io.File`),
   * so the catalog works wherever the store does — local, HDFS, S3A.
   *
-  * Scan planning is the engine's own: pushed filters prune the
-  * version's MANIFEST (per-file min/max stats + era-aware partition
-  * values, [[Snapshots.sqlPin]]) so whole files are skipped without
-  * opening a footer — ONE manifest resolution per scan, at scan build.
-  * The surviving file list is handed to Spark's native vectorized
-  * parquet scan ([[ParquetTable]]) for column pruning and execution —
-  * identical file-skipping to [[Snapshots.readRange]]
-  * (SnapshotCatalogSpec pins set-equality), identical row-reading
-  * machinery to every other parquet scan in the engine. All pushed
-  * filters are also kept as residuals, so pruning can only cut IO,
-  * never change answers.
+  * Scan planning is the library's own, with no second route: a loaded
+  * table pins its version ONCE ([[Snapshots.pinned]]) and hands its
+  * [[Snapshots.PinnedFileIndex]] to Spark's vectorized parquet scan
+  * (`ParquetScanBuilder`). Spark passes the scan's filters to the index
+  * when it lists files, and the index prunes the MANIFEST by them
+  * (stats + era-aware partition values), exactly as
+  * `Snapshots.readAsOf(v).where(...)` does (SnapshotCatalogSpec pins
+  * set-equality with [[Snapshots.readRange]]). So pruning happens when
+  * the scan is PLANNED: `inputFiles` and the size estimate name the
+  * whole version, and on a plan-side manifest (over 2 MB) only pruned
+  * entries reach the driver. Filters stay residual: pruning cuts IO,
+  * never answers.
   *
-  * A version carrying MERGE-ON-READ delete files is served, not
-  * refused: when the pin holds delete files the scan routes through a
-  * [[V1Scan]] bridge onto [[Snapshots.scanPin]] — the library's
-  * seq-guarded anti-join over the same pruned files, with the pushed
-  * filters residual above the bridge — because a plain DSv2 file scan
-  * cannot express the delete application. CDC-heavy tables stay on
-  * SQL between folds; [[Snapshots.compactDeletes]] restores the
-  * vectorized path.
+  * A version with MERGE-ON-READ delete files is served through a
+  * [[V1Scan]] bridge onto [[Snapshots.scanPin]] — the seq-guarded
+  * anti-join over the files the same index keeps for the pushed
+  * filters — because a DSv2 file scan cannot express the delete
+  * application; [[Snapshots.compactDeletes]] restores the vectorized
+  * path.
   *
   * Writes: `INSERT INTO` appends and `INSERT OVERWRITE` replaces the
   * table — both through the LIBRARY's transactional commits
@@ -324,11 +322,13 @@ private[sources] class SnapshotSqlTable(tableName: String,
 
   override def name(): String = s"$tableName@v$version"
 
-  override lazy val schema: StructType = {
-    val spark = SparkSession.active
-    Snapshots.schemaOf(spark, path, version)
-      .getOrElse(Snapshots.readAsOf(spark, path, version).schema)
-  }
+  /** Pinned once per loaded table: its scans share the index. */
+  private lazy val pinned = Snapshots.pinned(SparkSession.active, path,
+    version)
+
+  override lazy val schema: StructType =
+    Snapshots.schemaOf(SparkSession.active, path, version)
+      .getOrElse(pinned.schema)
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
@@ -336,7 +336,10 @@ private[sources] class SnapshotSqlTable(tableName: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new SnapshotScanBuilder(path, version, schema, options)
+    if (pinned.dels.isEmpty)
+      ParquetScanBuilder(SparkSession.active, pinned.index, pinned.schema,
+        pinned.schema, options)
+    else new MorScanBuilder(path, pinned, schema)
 
   /** SQL `DELETE FROM t WHERE key IN (…)`: the predicate becomes a
     * key set ([[SnapshotCatalog.deleteKeySet]]) and the delete is
@@ -448,17 +451,11 @@ private[sources] class StagedSqlTable(tableName: String, path: String,
     }
 }
 
-/** Pushdown seam: pushed filters drive MANIFEST pruning (file-level
-  * skip); every filter is also returned as residual, so answers never
-  * depend on pruning. `build()` pins the version once
-  * ([[Snapshots.sqlPin]]) and routes on what the pin holds: no delete
-  * files → a native [[ParquetTable]] scan of the pruned file list
-  * (vectorized read + column pruning — `pruneColumns` passes straight
-  * through); delete files → a [[V1Scan]] over [[Snapshots.scanPin]],
-  * the seq-guarded delete anti-join a plain file scan cannot express,
-  * with the residual filters still running above it. */
-private[sources] class SnapshotScanBuilder(path: String, version: Int,
-    tableSchema: StructType, options: CaseInsensitiveStringMap)
+/** The merge-on-read bridge: [[Snapshots.scanPin]] over the data files
+  * the version's index keeps for the pushed filters (its own prune) and
+  * every delete file. Pushed filters also run as residuals above it. */
+private[sources] class MorScanBuilder(path: String, pinned: Snapshots.Pinned,
+    tableSchema: StructType)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
@@ -476,30 +473,21 @@ private[sources] class SnapshotScanBuilder(path: String, version: Int,
     required = requiredSchema
 
   override def build(): Scan = {
-    val spark = SparkSession.active
-    val pin = Snapshots.sqlPin(spark, path, version, pushed.toSeq)
-    if (pin.dels.isEmpty) {
-      val pt = ParquetTable(s"graft-snap $path@v$version", spark, options,
-        pin.data.map(d => s"$path/${d.path}"), Some(tableSchema),
-        classOf[ParquetFileFormat])
-      val inner = pt.newScanBuilder(options)
-      inner.pruneColumns(required)
-      inner.build()
-    } else {
-      val req = required
-      new V1Scan {
-        override def readSchema(): StructType = req
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T =
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = req
-            override def buildScan(): RDD[Row] =
-              Snapshots.scanPin(context.sparkSession, path, pin,
-                Some(tableSchema))
-                .select(req.fieldNames.toIndexedSeq.map(col): _*).rdd
-          }.asInstanceOf[T]
-      }
+    val pin = Snapshots.Pin(pinned.mdf, pinned.index.files(pushed.toSeq),
+      pinned.dels)
+    val req = required
+    new V1Scan {
+      override def readSchema(): StructType = req
+      override def toV1TableScan[T <: BaseRelation with TableScan](
+          context: SQLContext): T =
+        new BaseRelation with TableScan {
+          override def sqlContext: SQLContext = context
+          override def schema: StructType = req
+          override def buildScan(): RDD[Row] =
+            Snapshots.scanPin(context.sparkSession, path, pin,
+              Some(tableSchema))
+              .select(req.fieldNames.toIndexedSeq.map(col): _*).rdd
+        }.asInstanceOf[T]
     }
   }
 }

@@ -25,4 +25,10 @@ object GraftSqlBridge {
     * private[sql] — same bridge rationale as the converters above). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A scan filter as a source `Filter` (Spark's `protected[sql]`
+    * translation), top-level columns only, as manifest stats are. */
+  def translateFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
 }

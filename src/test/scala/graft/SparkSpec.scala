@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,6 +50,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
       jobs.toArray(Array.empty[java.util.Properties]).toSeq
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Files the scans of `df`'s executed plan select, as URL-encoded
+    * paths (the format of `DataFrame.inputFiles`): V1 file scans
+    * (`FileSourceScanExec`) and DSv2 file scans (`BatchScanExec`) alike,
+    * read off their input partitions, so each scan's filters have
+    * reached its file index. `inputFiles` reads the optimized logical
+    * plan instead, before any filter has pruned a pinned snapshot
+    * read. */
+  def scannedFiles(df: DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.inputRDD.partitions.toSeq
+      case b: BatchScanExec => b.inputPartitions
+    }.flatten.flatMap {
+      case p: FilePartition => p.files.toSeq.map(_.filePath.toString)
+      case _ => Nil
+    }.toSet
   }
 
   /** Run `body` with whole-stage codegen off and interpreted expression

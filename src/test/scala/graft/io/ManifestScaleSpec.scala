@@ -16,7 +16,8 @@ class ManifestScaleSpec extends SparkSpec {
     * 1000th file has all-null stats (must be conservatively kept);
     * `day` carries a lexicographic string range. No data files exist —
     * these tests exercise PLANNING only. */
-  private def mkTable(n: Int, extras: Seq[FileEntry] = Nil): String = {
+  private def mkTable(n: Int, extras: Seq[FileEntry] = Nil,
+      name: Int => String = i => s"f$i"): String = {
     val t = tmpDir("manifest-scale")
     import spark.implicits._
     val entries = (0 until n).map { i =>
@@ -27,7 +28,10 @@ class ManifestScaleSpec extends SparkSpec {
             (i * 100L).toString, (i * 100L + 99).toString),
           "day" -> StatRange("string",
             f"2026-01-${i % 28 + 1}%02d", f"2026-01-${i % 28 + 1}%02d"))
-      FileEntry(s"data/c1/p=x/f$i.parquet", "x", 10L, stats)
+      // recorded sizes: a pinned scan plans these never-written files
+      // without statting them
+      FileEntry(s"data/c1/p=x/${name(i)}.parquet", "x", 10L, stats,
+        bytes = Some(1000L), mtime = Some(0L))
     } ++ extras
     entries.toDS().coalesce(1).write.parquet(s"$t/_manifests/v1")
     java.nio.file.Files.writeString(
@@ -95,6 +99,50 @@ class ManifestScaleSpec extends SparkSpec {
       .filter(refKeep(_, "day", "2026-01-03", "2026-01-04",
         numeric = false)).map(_.path).toSet
     assert(gotDay == wantDay && gotDay.nonEmpty)
+  }
+
+  /** Bytes of task results `body`'s jobs send to the driver. */
+  private def driverResultBytes(body: => Unit): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val total = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => total.addAndGet(m.resultSize))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { jobsStartedBy(body); total.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("100k-file manifest: a filter over a pinned read lists only the " +
+      "surviving entries on the driver, when the scan is planned") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val n = 100000
+    // incompressible file names push the segment past the 2 MB
+    // driver-side bound, as a real table's part-file UUIDs do
+    val t = mkTable(n, name = i => s"f$i-${java.util.UUID.randomUUID}-" +
+      java.util.UUID.randomUUID)
+    writeSchema(t)
+    assert(!Snapshots.manifestDF(spark, t, 1).queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical
+        .LocalRelation], "the fixture must exercise the plan-side backend")
+    var files = Set.empty[String]
+    val bytes = driverResultBytes {
+      files = scannedFiles(Snapshots.readAsOf(spark, t, 1)
+        .where(col("cents") >= 500000L && col("cents") <= 500250L))
+    }
+    assert(files.size == 3 + n / 1000, s"got ${files.size}")
+    (5000 to 5002).foreach(i =>
+      assert(files.exists(_.contains(s"data/c1/p=x/f$i-"))))
+    // the whole manifest is megabytes of entries; the pruned ones a few KB
+    assert(bytes < 256 * 1024, s"$bytes bytes of results reached the driver")
+  }
+
+  private def writeSchema(t: String): Unit = {
+    import org.apache.spark.sql.types._
+    Snapshots.writeSchema(spark, t, 1, StructType(Seq(
+      StructField("cents", LongType), StructField("day", StringType))))
   }
 
   // ---- metadata log: delta manifests + checkpoints --------------------

@@ -292,15 +292,27 @@ class SnapshotsMorSpec extends SparkSpec {
         rows(d, 1 to 3, 100L * i) }.reduce(_.unionByName(_)), t, "day",
       statsCols = Seq("cents"))
     assert(Snapshots.readManifest(spark, t, 1).size > 32)
-    def planJobs(): Map[String, Int] = Map(
-      "readPartition" -> jobsStartedBy(
-        Snapshots.readPartition(spark, t, "day", "d1")),
-      "readIn" -> jobsStartedBy(
-        Snapshots.readIn(spark, t, "cents", Seq("1", "101"))),
-      "readRange" -> jobsStartedBy(
-        Snapshots.readRange(spark, t, "cents", "0", "50")),
-      "readAsOf" -> jobsStartedBy(Snapshots.readAsOf(spark, t,
-        Snapshots.currentVersion(spark, t))))
+    // each read is built AND physically planned: its scans' file
+    // listings (where the file index prunes the manifest) run too
+    def planJobs(): Map[String, Int] = {
+      val v = Snapshots.currentVersion(spark, t)
+      Seq[(String, () => DataFrame)](
+        "readPartition" -> (() =>
+          Snapshots.readPartition(spark, t, "day", "d1")),
+        "readIn" -> (() =>
+          Snapshots.readIn(spark, t, "cents", Seq("1", "101"))),
+        "readRange" -> (() =>
+          Snapshots.readRange(spark, t, "cents", "0", "50")),
+        "readAsOf" -> (() => Snapshots.readAsOf(spark, t, v)),
+        "readAsOf.where" -> (() =>
+          Snapshots.readAsOf(spark, t, v).where(col("day") === "d2"))
+      ).map { case (name, df) =>
+        var files = Set.empty[String]
+        val jobs = jobsStartedBy { files = scannedFiles(df()) }
+        assert(files.nonEmpty, name)
+        name -> jobs
+      }.toMap
+    }
     // a listing (or footer-inference) job runs outside any SQL execution
     def listingJobs(body: => Unit): Int =
       jobPropertiesOf(body)
@@ -325,6 +337,60 @@ class SnapshotsMorSpec extends SparkSpec {
       Set("d1-1", "d1-3"))
     assert(Snapshots.read(spark, t).where(col("id").endsWith("-1"))
       .select("cents").as[Long].collect().toSet == Set(2000L))
+  }
+
+  test("a filter over readAsOf prunes its file index: readAsOf(v)" +
+      ".where(day = d3) scans exactly readPartition's files, with and " +
+      "without an active delete file") {
+    val t = tmpDir("mor_asof_prune")
+    Snapshots.commitFull((1 to 5).map(d => rows(s"d$d", 1 to 3, 10L * d))
+      .reduce(_.unionByName(_)), t, "day")
+    def dataFiles(df: DataFrame): Set[String] =
+      scannedFiles(df).filterNot(_.contains("/_del/"))
+    def check(want: Set[String]): Unit = {
+      val v = Snapshots.currentVersion(spark, t)
+      val asOf = Snapshots.readAsOf(spark, t, v).where(col("day") === "d3")
+      val part = Snapshots.readPartition(spark, t, "day", "d3")
+      val d3 = Snapshots.readManifest(spark, t, v)
+        .filter(e => e.kind.isEmpty && e.partition == "d3").map(_.path)
+      assert(d3.nonEmpty)
+      assert(dataFiles(asOf) == dataFiles(part))
+      assert(dataFiles(asOf).size == d3.size &&
+        d3.forall(p => dataFiles(asOf).exists(_.endsWith(p))),
+        s"only d3's files: ${dataFiles(asOf)}")
+      assert(ids(asOf) == want && ids(part) == want)
+    }
+    check(Set("d3-1", "d3-2", "d3-3"))
+    Snapshots.deleteRowsMoR(spark, t, "id", keyDf("d3-2"))
+    check(Set("d3-1", "d3-3"))
+  }
+
+  test("compactDeletes bounds its probe by the delete files' recorded " +
+      "key ranges: no aggregate over the delete keys, the same " +
+      "partitions folded") {
+    val t = tmpDir("mor_fold_ranges")
+    Snapshots.commitFull((1 to 6).map(d => rows(s"d$d", 1 to 3, 10L * d))
+      .reduce(_.unionByName(_)), t, "day", statsCols = Seq("id"))
+    Snapshots.deleteRowsMoR(spark, t, "id", keyDf("d2-1", "d2-3"))
+    Snapshots.deleteRowsMoR(spark, t, "id", keyDf("d5-2"))
+    // each delete file records its key's footer min/max
+    val dels = Snapshots.readManifest(spark, t, 3)
+      .filter(_.kind.contains("delete:id"))
+    assert(dels.map(e => (e.stats("id").lo, e.stats("id").hi)).toSet ==
+      Set(("d2-1", "d2-3"), ("d5-2", "d5-2")))
+    var folded = 0
+    val jobs = jobsStartedBy {
+      folded = Snapshots.compactDeletes(spark, t, "day", Seq("id"))
+    }
+    assert(folded == 2, "d2 and d5 hold suppressed rows")
+    // at most 10 jobs; a min/max aggregate over the delete keys to
+    // bound the probe would add 2 of its own (12)
+    assert(jobs <= 10, s"compactDeletes started $jobs jobs")
+    assert(ids(Snapshots.read(spark, t)) ==
+      (1 to 6).flatMap(d => (1 to 3).map(i => s"d$d-$i")).toSet --
+        Set("d2-1", "d2-3", "d5-2"))
+    assert(Snapshots.readManifest(spark, t, Snapshots.currentVersion(
+      spark, t)).forall(_.kind.isEmpty), "the fold drops the delete files")
   }
 
   test("the empty-version guard counts DATA files only: a fold or a " +

@@ -88,7 +88,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(hit.size < all.size, "planning must skip files")
 
     val read = Snapshots.readRange(spark, t, "cents", "2001", "2050")
-    assert(read.inputFiles.length == hit.size,
+    assert(scannedFiles(read).size == hit.size,
       "the scan must open only the pruned file set")
     assert(read.count() == 50)
     assert(snapshotMap(read) == Map("p2" -> (1 to 50).map(2000L + _).sum))
@@ -98,9 +98,12 @@ class SnapshotsSpec extends SparkSpec {
     assert(sub.count() == 10)
 
     // conjunctive pruning: a second range knocks out what the first kept
-    val none = Snapshots.readWhere(spark, t,
-      Map("cents" -> (("2001", "2050")), "id" -> (("p9", "p9z"))))
+    val none = Snapshots.read(spark, t).where(
+      col("cents") >= 2001L && col("cents") <= 2050L &&
+        col("id") >= "p9" && col("id") <= "p9z")
     assert(none.count() == 0)
+    assert(scannedFiles(none) == scannedFiles(read),
+      "the conjunction prunes by its stats-covered range")
 
     // SQL surface over the pinned snapshot
     Snapshots.registerView(spark, t, "snap_prune_t")
@@ -539,7 +542,7 @@ class SnapshotsSpec extends SparkSpec {
     val pr = Snapshots.readPartition(spark, t, "bucket", "d1")
     assert(pr.count() == 1)
     assert(pr.select("id").as[String].head() == "e2-1b")
-    val scanned = pr.inputFiles.toSeq
+    val scanned = scannedFiles(pr).toSeq
     val xPath = m.find(p => p.spec.contains("bucket") && p.partition == "x")
       .get.path
     assert(!scanned.exists(_.endsWith(xPath.split('/').last)),

@@ -22,9 +22,9 @@ class Bm25PersistSpec extends SparkSpec {
         && !p.getPath.contains("_manifests")) Seq(p.getPath)
       else Nil
     val committed = dataFiles(postings)
-    val scanned = df.inputFiles
+    val scanned = scannedFiles(df).toSeq
       .filter(_.contains("graft_bm25_index"))
-      .filterNot(_.contains("_manifests")).distinct
+      .filterNot(_.contains("_manifests"))
     assert(committed.size >= 4,
       s"degenerate postings layout: ${committed.size} files")
     assert(scanned.nonEmpty && scanned.length < committed.size,

@@ -55,8 +55,8 @@ class IvfPersistSpec extends SparkSpec {
         && !p.getPath.contains("_manifests")) Seq(p.getPath)
       else Nil
     val committed = dataFiles(new java.io.File(table))
-    val scanned = served.inputFiles.filter(_.contains(table))
-      .filterNot(_.contains("_manifests")).distinct
+    val scanned = scannedFiles(served).toSeq.filter(_.contains(table))
+      .filterNot(_.contains("_manifests"))
     assert(committed.size >= 5, s"degenerate index: ${committed.size} files")
     assert(scanned.nonEmpty && scanned.length < committed.size,
       s"expected pruned scan: read ${scanned.length} of ${committed.size}")

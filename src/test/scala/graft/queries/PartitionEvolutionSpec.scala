@@ -23,7 +23,7 @@ class PartitionEvolutionSpec extends SparkSpec {
         && !p.getPath.contains("_manifests")) Seq(p.getPath)
       else Nil
     val committed = dataFiles(new java.io.File(table))
-    val scanned = served.inputFiles.filter(_.contains(table)).distinct
+    val scanned = scannedFiles(served).toSeq.filter(_.contains(table))
     // era 2 wrote one dir per event type; all but 'purchase' must be
     // pruned, so the scan is strictly smaller than the committed set
     assert(scanned.nonEmpty && scanned.length < committed.size,

@@ -14,22 +14,6 @@ class SnapshotCatalogSpec extends SparkSpec {
     ids.map(i => (s"$part-$i", part, v + i)).toDF("id", "day", "cents")
   }
 
-  /** Files the SQL plan will actually scan: the built ParquetScan's
-    * file index, read off the optimized plan's V2 scan relation.
-    * (`DataFrame.inputFiles` only understands FileTable-backed
-    * relations; our table delegates to a ParquetScan built at
-    * pushdown time, so the file set lives on the Scan itself.) */
-  private def scannedFiles(df: DataFrame): Set[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation =>
-        r.scan match {
-          case p: org.apache.spark.sql.execution.datasources.v2.parquet
-              .ParquetScan => p.fileIndex.inputFiles.toSet
-          case _ => Set.empty[String]
-        }
-    }.flatten.toSet
-
   /** Register a fresh catalog name over `root` (catalog instances are
     * cached per session — each test uses its own name). */
   private var n = 0
@@ -95,7 +79,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     val lib = Snapshots.readRange(spark, t, "cents", "2000", "3005")
     assert(sql.as[(String, Long)].collect().sorted.toSeq ==
       lib.select("id", "cents").as[(String, Long)].collect().sorted.toSeq)
-    assert(scannedFiles(sql) == lib.inputFiles.toSet,
+    assert(scannedFiles(sql) == scannedFiles(lib),
       "SQL planning must skip exactly the files manifest stats rule out")
     def parts(fs: Set[String]): Set[String] =
       fs.map(_.split('/').takeRight(2).head)
@@ -124,7 +108,7 @@ class SnapshotCatalogSpec extends SparkSpec {
     val lib = Snapshots.readPartition(spark, t, "bucket", "d1")
     assert(sql.as[String].collect().toSeq.sorted ==
       lib.select("id").as[String].collect().toSeq.sorted)
-    assert(scannedFiles(sql) == lib.inputFiles.toSet,
+    assert(scannedFiles(sql) == scannedFiles(lib),
       "same-era files prune by partition value; legacy-era files " +
         "serve conservatively — identical sets through SQL and library")
     assert(sql.as[String].collect().toSeq == Seq("e2-1"))
