@@ -2042,15 +2042,13 @@ object Snapshots {
       import spark.implicits._
       val base = scanFiles(spark, table, p.data, schema)
       if (p.dels.isEmpty) base
-      else morJoin(spark, table, base,
-        p.data.map(e => (e.path, e.seq)).toDF("_grel", "_gseq"), p.dels,
-        "left_anti").drop("_grel", "_gseq")
+      else morJoin(spark, table, base, p.data.toDF, p.dels, "left_anti")
     }
 
-  /** Apply `dels` to `base` by each row's data-file seq (`_gseq`, from
-    * the `seqs` map `_grel` → `_gseq`, joined on `_metadata.file_path` —
-    * an attribute, so a filter above the read still reaches the scan's
-    * file index): one broadcast join per delete key column, guarded by
+  /** Apply `dels` to `base` by each row's data-file seq, looked up in
+    * the (`path`, `seq`) rows of `entries` by `_metadata.file_path` — an
+    * attribute, so a filter above the read still reaches the scan's
+    * file index: one broadcast join per delete key column, guarded by
     * `deleteSeq > dataSeq`. `anti` drops suppressed rows (the read);
     * semi keeps ONLY them (the fold's probe). An unmapped row reads as
     * seq 0, which every delete already exceeds for a file older than
@@ -2058,7 +2056,8 @@ object Snapshots {
     * Delete keys are read under their KNOWN schema (the key as the
     * version's type, `_delseq` int): no footer inference when planning. */
   private def morJoin(spark: SparkSession, table: String, base: DataFrame,
-      seqs: DataFrame, dels: Seq[PinFile], joinType: String): DataFrame = {
+      entries: DataFrame, dels: Seq[PinFile], joinType: String)
+      : DataFrame = {
     Seq("_grel", "_gseq", "_gdelkey", "_delseq").foreach(c =>
       require(!base.columns.contains(c),
         s"Snapshots: column name '$c' is reserved for merge-on-read " +
@@ -2072,8 +2071,10 @@ object Snapshots {
       .withColumn("_grel",
         regexp_extract(base.metadataColumn("_metadata")
           .getField("file_path"), "^.*/(data/c\\d+/.*)$", 1))
-      .join(broadcast(seqs.where(col("_gseq") >= dels.map(_.seq).min)),
-        Seq("_grel"), "left_outer")
+      .join(broadcast(entries.select(col("path").as("_grel"),
+          coalesce(col("seq"), lit(0)).as("_gseq"))
+        .where(col("_gseq") >= dels.map(_.seq).min)), Seq("_grel"),
+        "left_outer")
     dels.groupBy(_.delKey).toSeq.sortBy(_._1)
       .foldLeft(tagged) { case (acc, (keyCol, files)) =>
         import org.apache.spark.sql.types._
@@ -2085,7 +2086,7 @@ object Snapshots {
           acc(keyCol) === keys("_gdelkey") &&
             keys("_delseq") > coalesce(acc("_gseq"), lit(0)),
           joinType)
-      }
+      }.drop("_grel", "_gseq")
   }
 
   /** Merge-on-read row delete: commit version `v` adds ONE key-set
@@ -2198,8 +2199,7 @@ object Snapshots {
           spark.emptyDataset[String].toDF("_gpart")
         else
           morJoin(spark, table, scanFiles(spark, table, pruned, sch),
-            pruned.map(e => (e.path, e.seq)).toDF("_grel", "_gseq"),
-            files, "left_semi")
+            pruned.toDF, files, "left_semi")
             .select(col(partCol).cast("string").as("_gpart"))
       }
       .reduce(_.unionByName(_)).distinct()
@@ -2403,10 +2403,8 @@ object Snapshots {
     val p = pinned(spark, table, v)
     val base = scanIndex(spark, p.index, p.schema)
     if (p.dels.isEmpty) base
-    else morJoin(spark, table, base,
-      p.mdf.where(!isDelete(col("kind"))).select(col("path").as("_grel"),
-        coalesce(col("seq"), lit(0)).as("_gseq")),
-      p.dels, "left_anti").drop("_grel", "_gseq")
+    else morJoin(spark, table, base, p.mdf.where(!isDelete(col("kind"))),
+      p.dels, "left_anti")
   }
 
   /** Read the latest snapshot — pinned at CALL time (the manifest is

@@ -339,7 +339,7 @@ private[sources] class SnapshotSqlTable(tableName: String,
     if (pinned.dels.isEmpty)
       ParquetScanBuilder(SparkSession.active, pinned.index, pinned.schema,
         pinned.schema, options)
-    else new MorScanBuilder(path, pinned, schema)
+    else new MorScanBuilder(path, pinned)
 
   /** SQL `DELETE FROM t WHERE key IN (…)`: the predicate becomes a
     * key set ([[SnapshotCatalog.deleteKeySet]]) and the delete is
@@ -454,13 +454,12 @@ private[sources] class StagedSqlTable(tableName: String, path: String,
 /** The merge-on-read bridge: [[Snapshots.scanPin]] over the data files
   * the version's index keeps for the pushed filters (its own prune) and
   * every delete file. Pushed filters also run as residuals above it. */
-private[sources] class MorScanBuilder(path: String, pinned: Snapshots.Pinned,
-    tableSchema: StructType)
+private[sources] class MorScanBuilder(path: String, pinned: Snapshots.Pinned)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var pushed = Array.empty[Filter]
-  private var required: StructType = tableSchema
+  private var required: StructType = pinned.schema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
@@ -485,7 +484,7 @@ private[sources] class MorScanBuilder(path: String, pinned: Snapshots.Pinned,
           override def schema: StructType = req
           override def buildScan(): RDD[Row] =
             Snapshots.scanPin(context.sparkSession, path, pin,
-              Some(tableSchema))
+              Some(pinned.schema))
               .select(req.fieldNames.toIndexedSeq.map(col): _*).rdd
         }.asInstanceOf[T]
     }
