@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -2003,12 +2004,17 @@ object Snapshots {
   private[graft] case class Pin(mdf: DataFrame, data: Seq[PinFile],
       dels: Seq[PinFile])
 
+  /** Manifest rows as pin entries; a driver-side manifest's are decoded
+    * from the optimizer's local rows, so no query runs for them. */
   private def pinFiles(rows: DataFrame): Seq[PinFile] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
-        col("kind"), col("bytes"), col("mtime"))
-      .as[PinFile].collect().toSeq
+    val enc = ExpressionEncoder[PinFile]()
+    val ds = rows.select(col("path"), coalesce(col("seq"), lit(0)).as("seq"),
+      col("kind"), col("bytes"), col("mtime")).as[PinFile](enc)
+    ds.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        l.data.map(enc.resolveAndBind(l.output).createDeserializer())
+      case _ => ds.collect().toSeq
+    }
   }
 
   /** The one manifest pin behind every version-pinned read, write-side
@@ -2370,11 +2376,9 @@ object Snapshots {
       : Pinned = {
     val mdf = manifestDF(spark, table, v)
     val data = !isDelete(col("kind"))
-    // driver-side: take every entry now; only a pruning scan collects
-    val all = mdf.queryExecution.logical match {
-      case _: LocalRelation => Some(pinFiles(mdf))
-      case _ => None
-    }
+    // driver-side: every entry now; only a pruning listing reads it again
+    val all = Option.when(
+      mdf.queryExecution.logical.isInstanceOf[LocalRelation])(pinFiles(mdf))
     val index = new PinnedFileIndex(spark, table,
       (fs(spark, table).makeQualified(new Path(table)).toString, v),
       all.isEmpty, filters =>
